@@ -1,8 +1,8 @@
 """Benchmark harness.
 
 Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS, default: all cores]
+and print ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "triples": n, "triples_per_sec": r}.
 
 --scale mode: run the flagship KG pipeline at two parallelism levels
@@ -217,6 +217,25 @@ def _session(cpus: int, pretouch: bool = False):
                     "spark.driver.extraJavaOptions": opts})
 
 
+def _pin_allocators() -> None:
+    """The -Xms fix (see _session) keeps the JVM from returning heap
+    pages to this free-page-reporting hypervisor; python UDF workers
+    have the same failure mode through their allocators (glibc trim /
+    mmap'd large blocks / Arrow pool decay all MADV/munmap freed pages,
+    which the host then unmaps — ~20us to fault back in).  Worker
+    counts scale with cores, so high-core sessions pay
+    disproportionally (measured: the identical tag stage burned 110-160
+    busy core-s at pinned local[4] vs up to 578 at local[16]).  Pin the
+    allocators: never trim, keep large allocations in the arena, use
+    the (glibc) system pool for Arrow.  Workers inherit this env
+    through the gateway JVM, so call it before the session starts, in
+    EVERY bench mode."""
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
+    os.environ.setdefault("MALLOC_ARENA_MAX", "4")
+    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+
+
 def _sf_of(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else -1.0
@@ -224,24 +243,9 @@ def _sf_of(sf_dir: str) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # The -Xms fix (see _session) keeps the JVM from returning heap
-    # pages to this free-page-reporting hypervisor; python UDF workers
-    # have the same failure mode through their allocators (glibc trim /
-    # mmap'd large blocks / Arrow pool decay all MADV/munmap freed
-    # pages, which the host then unmaps — ~20us to fault back in).
-    # Worker counts scale with cores, so high-core sessions pay
-    # disproportionally (measured: the identical tag stage burned
-    # 110-160 busy core-s at pinned local[4] vs up to 578 at
-    # local[16]). Pin the allocators: never trim, keep large
-    # allocations in the arena, use the (glibc) system pool for Arrow.
-    # Workers inherit this env through the gateway JVM. Set for EVERY
-    # bench mode — the headline local[32] run spawns the most workers.
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-    os.environ.setdefault("MALLOC_ARENA_MAX", "4")
-    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-
+    _pin_allocators()
+    from bern2_spark.session import default_cpus
+    cpus = default_cpus()
     if "--scale-leg" in sys.argv:
         # one fresh-process measurement leg: warm-up + one timed run of
         # the full pipeline AND of the tag-only stage (the pure

@@ -9,7 +9,7 @@ Modes:
       (collect the query's full result, normalized+sorted, to a file —
        for exact before/after equivalence diffs)
 
-Timing uses the same session shape as bench.py (local[$SPARK_GRAFT_CPUS],
+Timing uses bench.py's session (local[$SPARK_GRAFT_CPUS or all cores],
 shuffle partitions 4x cpus, 8g fixed heap) and the same count()
 materialization by default; --noop uses the noop sink (computes every
 column).  One warm pass at sf0.001 per query shape first.
@@ -26,17 +26,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _session():
-    from bern2_spark.session import get_spark
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-    os.environ.setdefault("MALLOC_ARENA_MAX", "4")
-    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    return get_spark(
-        f"bern2-bench-extra-{cpus}", master=f"local[{cpus}]",
-        extra_conf={"spark.sql.shuffle.partitions": str(4 * cpus),
-                    "spark.driver.extraJavaOptions": f"-Xms{mem}"})
+    import bench
+    from bern2_spark.session import default_cpus
+    bench._pin_allocators()
+    return bench._session(default_cpus())
 
 
 def _materialize(df, noop: bool) -> int:

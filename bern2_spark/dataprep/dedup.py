@@ -326,16 +326,6 @@ def simhash_sketches(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", simhash(F.col(text_col)).alias("simhash"))
 
 
-def simhash_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Near-dup groups by identical 64-bit simhash (Hamming-0 buckets;
-    simhash_near_pairs handles Hamming<=k)."""
-    return (simhash_sketches(docs, text_col)
-            .groupBy("simhash")
-            .agg(F.count("*").alias("n_docs"),
-                 F.min("doc_id").alias("canonical_doc_id"))
-            .filter(F.col("n_docs") > 1))
-
-
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
                        text_col: str = "text") -> DataFrame:
     """Near-dup pairs with Hamming distance <= k over the 64-bit

@@ -147,7 +147,6 @@ def expand_cuiless_mentions(normalized: DataFrame,
 def apply_abbreviation_level(normalized: DataFrame, lexicon_df: DataFrame,
                              abbrevs: DataFrame,
                              track_persisted: list | None = None,
-                             early_exit_probe: bool = False,
                              lut: dict | None = None) -> DataFrame:
     """Full abbreviation sieve level: re-run the lexicon sieve on the
     LONG form of CUI-less short-form mentions, keep the original
@@ -165,14 +164,6 @@ def apply_abbreviation_level(normalized: DataFrame, lexicon_df: DataFrame,
     abbrevs = abbrevs.persist()
     if track_persisted is not None:
         track_persisted.append(abbrevs)
-    # OPT-IN early-exit on abbreviation-free corpora: skips ~8
-    # scheduled jobs (the same guard the reference applies before
-    # normalization, bern2/bern2.py:396-414; SURVEY §4 "early guard").
-    # Off by default: the probe is a blocking driver action during
-    # plan construction, which latency-sensitive callers (and the
-    # driver-contract queries) must not pay.
-    if early_exit_probe and abbrevs.limit(1).count() == 0:
-        return normalized
     exp = expand_cuiless_mentions(normalized, abbrevs)
     retry_in = (exp
                 .filter((F.col("cui") == CUI_LESS)

@@ -169,22 +169,6 @@ HUMAN_TAXID = 9606  # the reference's hardcoded jar argument
                     # (bern2/normalizer.py:375: '9606',  # human)
 
 
-def species_context(mentions: DataFrame) -> DataFrame:
-    """Per-doc species context: the smallest NCBI taxid among the doc's
-    normalized species mentions (min = deterministic under any
-    partitioning). Docs without species mentions fall back to human at
-    join time. The reference hardcodes 9606 for every doc; this helper
-    is the multi-species extension its jar argument implies."""
-    return (mentions
-            .filter((F.col("ent_type") == "species")
-                    & F.col("cui").startswith("NCBI:txid"))
-            .select("doc_id",
-                    F.regexp_extract("cui", r"NCBI:txid(\d+)", 1)
-                    .cast("long").alias("taxid"))
-            .groupBy("doc_id")
-            .agg(F.min("taxid").alias("context_taxid")))
-
-
 def gene_taxon_lookup(mentions: DataFrame, gene_taxa: DataFrame,
                       context: Optional[DataFrame] = None,
                       surface_col: str = "mention") -> DataFrame:

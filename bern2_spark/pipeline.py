@@ -58,6 +58,18 @@ class PipelineResult:
         self.release()
 
 
+def pipeline_input(documents: DataFrame) -> DataFrame:
+    """Test-corpus documents (doc_id, text, lang, source, ...) in the
+    (repo, path, commit, lang, content) shape run_pipeline consumes."""
+    did = F.col("doc_id").cast("string")
+    return documents.select(
+        F.col("source").alias("repo"),
+        F.concat(F.lit("docs/"), did, F.lit(".txt")).alias("path"),
+        F.sha2(did, 256).alias("commit"),
+        F.col("lang"),
+        F.col("text").alias("content"))
+
+
 def run_pipeline(documents: DataFrame,
                  lexicon_rows: Sequence[Tuple[str, str, str]],
                  spark: Optional[SparkSession] = None,

@@ -51,40 +51,15 @@ def _values_sql(rows, names):
     return f"(VALUES {vals}) AS lex({', '.join(names)})"
 
 
-def _docs(spark: SparkSession, sf_dir: str,
-          spread: bool = True) -> DataFrame:
-    # single-row-group parquet scans as ONE task: fan the (column-
-    # pruned) rows out to the session's parallelism so the scan-fused
-    # per-row work (tokenize, hashes, regex) runs on every core, not
-    # one.  Column pruning pushes each query's select below the
-    # repartition, so only the used columns move (see _spread).
-    # ``spread=False`` for consumers whose per-row work is lighter
-    # than the repartition (or that scan docs in several plan
-    # branches, repeating the exchange per branch) — chosen per query
-    # from the measured A/B at sf1.0 (OPTIMIZATION_r06.md).
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return _spread(d, spark) if spread else d
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _emb(spark: SparkSession, sf_dir: str,
-         spread: bool = True) -> DataFrame:
-    # spread=False for (a) the numpy pair-scoring queries, whose
-    # harness repartitions internally (a second exchange would be pure
-    # overhead), and (b) map-only plans (no exchange between scan and
-    # output), where the bench's count() prunes the projection and the
-    # repartition is the only thing added to the timed path.
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return _spread(e, spark) if spread else e
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread: the events queries' per-row arithmetic is cheap, so
-    # repartitioning 1M wide rows costs more than the single-row-group
-    # scan it would parallelize (measured: events_rfm 0.4 s raw vs
-    # 2.5 s round-robin-spread / 1.4 s hash-spread at sf1.0 — the
-    # keyless repartition additionally pays sortBeforeRepartition over
-    # the whole input).  _docs/_emb stay spread: their consumers fuse
-    # genuinely heavy per-row work (tokenize x hashes) into the scan.
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
@@ -787,16 +762,6 @@ _DUP_UNION_SQL = """
 """
 
 
-def _spread(df, spark):
-    """Single-file inputs scan as one partition; fan map-side work out
-    to the session's parallelism (no-op cost at this data size)."""
-    import os
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":
-        return df
-    from bern2_spark.pipeline import _fan_out_narrow_scan
-    return _fan_out_narrow_scan(df, spark)
-
-
 def _dup_docs(spark, sf_dir):
     d = _docs(spark, sf_dir).select("doc_id", "text")
     exact = (d.filter(F.col("doc_id") % 11 == 0)
@@ -1221,7 +1186,7 @@ WHERE rank <= 5
 """)
 def ann_topk_bruteforce(spark, sf_dir):
     from bern2_spark.dataprep.similarity import brute_force_topk
-    emb = _emb(spark, sf_dir, spread=False).select(
+    emb = _emb(spark, sf_dir).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double"))
         .alias("embedding"))
@@ -1266,7 +1231,7 @@ def ann_lsh_bucketed(spark, sf_dir):
     cosine re-rank inside buckets; hyperplanes precomputed driver-side
     (no per-row constant recompute)."""
     from bern2_spark.dataprep.similarity import lsh_bucketed_topk
-    emb = _emb(spark, sf_dir, spread=False).select(
+    emb = _emb(spark, sf_dir).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double"))
         .alias("embedding"))
@@ -1344,7 +1309,7 @@ def ann_lsh_multiprobe(spark, sf_dir):
     single-probe variant sits at ~0.2 — the corpus-side layout is
     unchanged; only the broadcast query side fans out."""
     from bern2_spark.dataprep.similarity import lsh_multiprobe_topk
-    emb = _emb(spark, sf_dir, spread=False).select(
+    emb = _emb(spark, sf_dir).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double"))
         .alias("embedding"))
@@ -2465,16 +2430,8 @@ def kg_cooccurrence(spark, sf_dir):
 @q("kg_pipeline_triples", _golden_triples_sql())
 def kg_pipeline_triples(spark, sf_dir):
     from bern2_spark import corpus
-    from bern2_spark.pipeline import run_pipeline
-    # raw read (no _spread): run_pipeline applies its own fan-out, and
-    # a pre-spread input would double the repartition
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("source").alias("repo"),
-        F.concat(F.lit("docs/"), F.col("doc_id").cast("string"),
-                 F.lit(".txt")).alias("path"),
-        F.sha2(F.col("doc_id").cast("string"), 256).alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"))
+    from bern2_spark.pipeline import pipeline_input, run_pipeline
+    docs = pipeline_input(_docs(spark, sf_dir))
     # lexicon over the driver-corpus vocabulary so the run produces real
     # mention/triple volume (incl. CUI-less -> neural fallback traffic)
     res = run_pipeline(docs, corpus.DRIVER_VOCAB_LEXICON, spark)
@@ -2498,14 +2455,8 @@ def kg_pubannotation(spark, sf_dir):
     golden regenerated under tools/make_golden.py's parity gate."""
     from bern2_spark import corpus
     from bern2_spark.operators.postprocess import to_pubannotation
-    from bern2_spark.pipeline import run_pipeline
-    docs = _docs(spark, sf_dir).select(
-        F.col("source").alias("repo"),
-        F.concat(F.lit("docs/"), F.col("doc_id").cast("string"),
-                 F.lit(".txt")).alias("path"),
-        F.sha2(F.col("doc_id").cast("string"), 256).alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"))
+    from bern2_spark.pipeline import pipeline_input, run_pipeline
+    docs = pipeline_input(_docs(spark, sf_dir))
     res = run_pipeline(docs, corpus.DRIVER_VOCAB_LEXICON, spark)
     _persist_generation("kg_pubannotation").extend(res._persisted)
     pa_docs = to_pubannotation(res.annotations,
@@ -2607,7 +2558,7 @@ def dedup_quality_keep(spark, sf_dir):
 
 def _cc_pairs(spark, sf_dir):
     """The Spark twin of _CC_PAIRS_SQL."""
-    d = _docs(spark, sf_dir, spread=False).select("doc_id")
+    d = _docs(spark, sf_dir).select("doc_id")
     did = F.col("doc_id")
     return (d.filter(did % 50 < 9)
             .select(did.alias("doc_a"), (did + 1).alias("doc_b"))
@@ -4411,8 +4362,8 @@ _CODE_CTE_BODY = """code AS (
 _CODE_CTE = "\nWITH " + _CODE_CTE_BODY
 
 
-def _code(spark, sf_dir, spread=True):
-    d = _docs(spark, sf_dir, spread=spread)
+def _code(spark, sf_dir):
+    d = _docs(spark, sf_dir)
     did = F.col("doc_id")
     hdr = (F.when(did % 7 == 0,
                   F.lit("SPDX-License-Identifier: MIT\n"))
@@ -4469,7 +4420,7 @@ def code_stack_filters(spark, sf_dir):
     posture."""
     from bern2_spark.dataprep.codeqc import stack_quality_features
     return stack_quality_features(
-        _code(spark, sf_dir, spread=False)).select(
+        _code(spark, sf_dir)).select(
         "doc_id", "repo", "path", "max_line_len", "avg_line_len",
         "alnum_frac", "autogen", "passes")
 
@@ -4830,7 +4781,7 @@ def events_top_paths(spark, sf_dir):
             .limit(20))
 
 
-# ---------------------------------------------- bloom runtime filter
+# ------------------------------------------------- selective semi-join
 
 @q("join_bloom_pruned", """
 SELECT l_orderkey, l_linenumber, l_quantity
@@ -4840,21 +4791,18 @@ WHERE EXISTS (SELECT 1 FROM orders o
                 AND o.o_orderkey % 20 = 0)
 """)
 def join_bloom_pruned(spark, sf_dir):
-    """Semi-join with a manual Bloom runtime filter: the probe side
-    (lineitem) is pruned by a broadcast bitmap of the selective build
-    side's keys BEFORE the exact join's shuffle — k broadcast word
-    lookups stream the probe with zero added exchanges, and the
-    verifying semi-join makes the result bit-identical to the plain
-    EXISTS (Bloom filters have no false negatives), which is why the
-    oracle is the plain semi-join SQL
-    (operators/runtime_filter.py:bloom_semi_join)."""
-    from bern2_spark.operators.runtime_filter import bloom_semi_join
+    """Semi-join of lineitem against a selective build side
+    (1 order in 20).  Spark's runtime Bloom filter
+    (``spark.sql.optimizer.runtime.bloomFilter.enabled``, on by
+    default) prunes the probe side before the join's shuffle whenever
+    the planner finds that shape worth it; a hand-built pre-filter
+    measured 2-3x slower than this plain join at sf0.1."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     orders = (spark.read.parquet(f"{sf_dir}/orders.parquet")
               .filter(F.col("o_orderkey") % 20 == 0)
               .select(F.col("o_orderkey").alias("l_orderkey")))
-    out = bloom_semi_join(li, orders, "l_orderkey")
-    return out.select("l_orderkey", "l_linenumber", "l_quantity")
+    return (li.join(orders, "l_orderkey", "left_semi")
+            .select("l_orderkey", "l_linenumber", "l_quantity"))
 
 
 # --------------------------------------------- event funnel/retention
@@ -5401,9 +5349,9 @@ src AS (SELECT repo, path, commit_sha, doc_id, lang,
 _CODE_SRC_BODY = _code_src_body()
 
 
-def _code_src(spark, sf_dir, spread=True):
+def _code_src(spark, sf_dir):
     """Spark twin of the src CTE — byte-identical injected content."""
-    c = _code(spark, sf_dir, spread=spread)
+    c = _code(spark, sf_dir)
     did = F.col("doc_id")
     fam = F.lit("text")
     for nat, pl in _NAT_TO_FAMILY.items():
@@ -5646,8 +5594,7 @@ def kg_code_pipeline(spark, sf_dir):
     from bern2_spark.dataprep.codekg import (code_triples, extract_defs,
                                              extract_imports)
     from bern2_spark.dataprep.codeqc import stack_quality_features
-    feat = stack_quality_features(_code_src(spark, sf_dir,
-                                            spread=False))
+    feat = stack_quality_features(_code_src(spark, sf_dir))
     cur = feat.filter("passes").select(
         "repo", "path", "commit_sha", "lang", "content", "doc_id")
     return code_triples(extract_imports(cur), extract_defs(cur))
@@ -6392,9 +6339,9 @@ dsrc AS (SELECT repo, path, doc_id, lang,
   FROM fam)""")
 
 
-def _dsrc(spark, sf_dir, spread=True):
+def _dsrc(spark, sf_dir):
     """Spark twin of the dsrc CTE — byte-identical documented fns."""
-    c = _code(spark, sf_dir, spread=spread)
+    c = _code(spark, sf_dir)
     did = F.col("doc_id")
     fam = F.lit("text")
     for nat, pl in _NAT_TO_FAMILY.items():
@@ -6479,9 +6426,9 @@ fsrc AS (SELECT repo, path, doc_id, lang,
   FROM fam WHERE lang = 'python')""")
 
 
-def _fsrc(spark, sf_dir, spread=True):
+def _fsrc(spark, sf_dir):
     """Spark twin of the fsrc CTE."""
-    c = _code(spark, sf_dir, spread=spread)
+    c = _code(spark, sf_dir)
     did = F.col("doc_id")
     fam = F.lit("text")
     for nat, pl in _NAT_TO_FAMILY.items():
@@ -6533,7 +6480,7 @@ def dedup_function_clones(spark, sf_dir):
     land in the same class as the %3==0 canonical forms, which is what
     the hash check proves.  Only the 32-byte hash shuffles."""
     from bern2_spark.dataprep.codeqc import function_clones
-    return function_clones(_fsrc(spark, sf_dir, spread=False))
+    return function_clones(_fsrc(spark, sf_dir))
 
 
 # ------------------------------------------------ external-API usage
@@ -7105,7 +7052,7 @@ def qc_pmi_collocations(spark, sf_dir):
     over ALL bigrams (the probability space), not just min_count
     survivors; integral counts make the single ln engine-exact."""
     from bern2_spark.dataprep.textqc import pmi_collocations
-    return pmi_collocations(_docs(spark, sf_dir, spread=False),
+    return pmi_collocations(_docs(spark, sf_dir),
                             min_count=5)
 
 
@@ -7136,7 +7083,7 @@ def qc_unused_imports(spark, sf_dir):
     are semi-joined against the BROADCAST root set BEFORE the count
     shuffle (the BM25 pruning discipline)."""
     from bern2_spark.dataprep.codekg import extract_imports, unused_imports
-    src = _code_src(spark, sf_dir, spread=False)
+    src = _code_src(spark, sf_dir)
     return unused_imports(src, extract_imports(src))
 
 
@@ -7188,7 +7135,7 @@ def qc_halstead_metrics(spark, sf_dir):
     content scan with zero exchanges; log2 = ln/ln(2) in both
     engines so the doubles agree exactly."""
     from bern2_spark.dataprep.codeqc import halstead_metrics
-    return halstead_metrics(_code(spark, sf_dir, spread=False))
+    return halstead_metrics(_code(spark, sf_dir))
 
 
 # ------------------------------------------------- hybrid search (RRF)
@@ -7468,7 +7415,7 @@ def qc_mojibake(spark, sf_dir):
     same deterministic artifacts on doc_id % 13 residues so true
     positives exist at every SF."""
     from bern2_spark.dataprep.textqc import mojibake_features
-    d = _docs(spark, sf_dir, spread=False).withColumn(
+    d = _docs(spark, sf_dir).withColumn(
         "text",
         F.concat(F.col("text"),
                  F.when(F.col("doc_id") % 13 == 3, F.lit(" cafÃ©"))
@@ -7541,7 +7488,7 @@ def ann_range_search(spark, sf_dir):
     compares the ROUNDED cosine so the boundary set is identical
     across engines."""
     from bern2_spark.dataprep.similarity import range_search
-    emb = _emb(spark, sf_dir, spread=False).select(
+    emb = _emb(spark, sf_dir).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double"))
         .alias("embedding"))
@@ -7615,7 +7562,7 @@ def mix_curriculum_order(spark, sf_dir):
     sort: per-domain windows plus a broadcast domain-index dim;
     single-partition work is bounded by the domain count."""
     from bern2_spark.dataprep.mixing import curriculum_order
-    out = curriculum_order(_docs(spark, sf_dir, spread=False),
+    out = curriculum_order(_docs(spark, sf_dir),
                            F.col("n_chars"),
                            domain_col="source", id_col="doc_id")
     return out.withColumn("seq", F.col("seq").cast("long"))
@@ -7811,7 +7758,7 @@ def qc_readability(spark, sf_dir):
     map over the scan, no shuffle, no UDF.  Float literals are CAST
     to DOUBLE in the oracle so DuckDB doesn't run them as DECIMAL."""
     from bern2_spark.dataprep.textqc import readability_features
-    return readability_features(_docs(spark, sf_dir, spread=False))
+    return readability_features(_docs(spark, sf_dir))
 
 
 @q("events_rfm", """
@@ -7975,7 +7922,7 @@ def kg_license_conflicts(spark, sf_dir):
     never a vanishing class); the license attach is a co-partitioned
     (repo, path) join."""
     from bern2_spark.dataprep.codeqc import clone_license_conflicts
-    return clone_license_conflicts(_fsrc(spark, sf_dir, spread=False))
+    return clone_license_conflicts(_fsrc(spark, sf_dir))
 
 
 @q("events_ab_test", """
@@ -8413,7 +8360,7 @@ def ann_pq_distortion(spark, sf_dir):
     from bern2_spark.dataprep.similarity import (pq_distortion,
                                                  pq_train,
                                                  training_sample)
-    emb = _emb(spark, sf_dir, spread=False).select(
+    emb = _emb(spark, sf_dir).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double"))
         .alias("embedding"))
@@ -8579,7 +8526,12 @@ def qc_lang_agreement(spark, sf_dir):
     map-side-combined groupBy over the |langs|² confusion keys; the
     fraction window runs over that tiny aggregate."""
     from bern2_spark.dataprep.textqc import language_id
-    d = language_id(_docs(spark, sf_dir)).select("lang", "lang_pred")
+    from bern2_spark.pipeline import _fan_out_narrow_scan
+    # the per-row detector runs on every core, not on the one-file
+    # scan's single task (without it: 34% slower at sf0.1/local[4],
+    # slower in each of three interleaved bench.py pairs)
+    d = (language_id(_fan_out_narrow_scan(_docs(spark, sf_dir), spark))
+         .select("lang", "lang_pred"))
     conf = (d.groupBy("lang", "lang_pred")
             .agg(F.count("*").cast("long").alias("n_docs")))
     w = Window.partitionBy("lang")
@@ -8624,7 +8576,7 @@ def qc_profile_documents(spark, sf_dir):
     aggregate (Deequ's scan-sharing design); output is bounded by
     the column count, never the row count."""
     from bern2_spark.dataprep.profile import profile_columns
-    return profile_columns(_docs(spark, sf_dir, spread=False),
+    return profile_columns(_docs(spark, sf_dir),
                            ["doc_id", "text", "lang", "source",
                             "n_chars"])
 
@@ -8663,7 +8615,7 @@ def qc_constraints(spark, sf_dir):
     counts, because any engine disagreement on a predicate flips a
     row."""
     from bern2_spark.dataprep.profile import check_constraints
-    d = _docs(spark, sf_dir, spread=False)
+    d = _docs(spark, sf_dir)
     return check_constraints(
         d,
         [("doc_id_non_negative", F.col("doc_id") >= 0),

@@ -30,8 +30,7 @@ DEFAULT_CONF = {
     # levers were measured and REJECTED here.  16 MB scan splits (to
     # parallelize multi-row-group files) lost to the default 128 MB on
     # every lineitem query (task overhead > row-group parallelism at
-    # this scale; single-row-group files are handled by the _spread
-    # repartition instead).  preferSortMergeJoin=false + a 64 MB
+    # this scale).  preferSortMergeJoin=false + a 64 MB
     # shuffled-hash threshold sped the iterative graph loops ~10% but
     # slowed the flagship KG pipeline 13s -> 17s at sf1.0 — net wash,
     # worst on the headline — so the default SMJ planning stays.
@@ -48,17 +47,23 @@ DEFAULT_CONF = {
 }
 
 
+def default_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS``, else the cores this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "bern2_spark", master: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the same entry point serves tests, bench, and the two-parallelism
-    scaling run required by BENCH/BASELINE.md.
+    ``master`` defaults to ``local[default_cpus()]`` so the same entry
+    point serves tests, bench, and the two-parallelism scaling run
+    required by BENCH/BASELINE.md.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
     if extra_conf:

@@ -1277,27 +1277,6 @@ def test_codeqc_filters_plan_scan_fused(spark, code_files):
         assert n_ex == 0, f"scan-fused op shuffles:\n{plan}"
 
 
-def test_bloom_semi_join_exact_and_prunes(spark):
-    import re
-
-    from pyspark.sql import functions as F
-
-    from bern2_spark.operators.runtime_filter import bloom_semi_join
-    big = spark.createDataFrame([(i, f"v{i}") for i in range(2000)],
-                                ["key", "val"])
-    small = spark.createDataFrame([(i * 40,) for i in range(20)],
-                                  ["key"])
-    out = bloom_semi_join(big, small, "key", m_bits=1 << 14, k=5)
-    got = sorted(r.key for r in out.collect())
-    want = sorted(r.key for r in
-                  big.join(small, "key", "left_semi").collect())
-    assert got == want and len(got) == 20
-    # the bitmap lookups must not add probe-side exchanges: every
-    # added join is a BroadcastHashJoin
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"\bBroadcastHashJoin\b", plan)) >= 5
-
-
 def test_snapshot_diff_roundtrip_law(spark):
     from bern2_spark.operators.upsert import (snapshot_diff,
                                               upsert_snapshot)

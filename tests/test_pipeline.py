@@ -1,9 +1,12 @@
 """End-to-end pipeline tests on the deterministic synthetic corpus."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from bern2_spark.pipeline import run_pipeline, run_synthetic
+from bern2_spark.pipeline import (_fan_out_narrow_scan, pipeline_input,
+                                  run_pipeline, run_synthetic)
 from bern2_spark.schemas import CUI_LESS
 
 
@@ -82,10 +85,7 @@ def test_tag_only_sentinel_never_escapes(spark):
     from bern2_spark.queries import _docs
 
     docs = (_docs(spark, "/root/testdata/sf0.001")
-            .selectExpr("source as repo",
-                        "concat('docs/', doc_id, '.txt') as path",
-                        "sha2(cast(doc_id as string), 256) as commit",
-                        "lang", "text as content"))
+            .transform(pipeline_input))
     with run_pipeline(docs, corpus.DRIVER_VOCAB_LEXICON, spark) as res:
         bad = res.triples.filter(
             F.col("obj").contains(corpus.TAG_ONLY)).count()
@@ -105,3 +105,62 @@ def test_release_unpersists(spark):
     res.release()
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after <= before
+
+
+@pytest.fixture(scope="module")
+def one_file_docs(spark, tmp_path_factory):
+    """The synthetic corpus as a single-file parquet, plus its lexicon."""
+    from bern2_spark import corpus
+    lex = corpus.make_lexicon(42)
+    path = str(tmp_path_factory.mktemp("one_file") / "docs.parquet")
+    corpus.documents_df(spark, 60, 42, lex).coalesce(1).write.parquet(path)
+    return path, lex
+
+
+def _round_robin_exchanges(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [int(n) for n in
+            re.findall(r"Exchange RoundRobinPartitioning\((\d+)\)", plan)]
+
+
+def test_fan_out_single_file_scan(spark, one_file_docs):
+    """A one-file scan gets exactly one round-robin exchange, to the
+    session's parallelism."""
+    scan = spark.read.parquet(one_file_docs[0])
+    assert len(scan.inputFiles()) == 1
+    out = _fan_out_narrow_scan(scan, spark)
+    assert _round_robin_exchanges(out) == [
+        spark.sparkContext.defaultParallelism]
+
+
+def test_fan_out_skips_cached_input(spark, one_file_docs):
+    cached = spark.read.parquet(one_file_docs[0]).cache()
+    try:
+        out = _fan_out_narrow_scan(cached, spark)
+        assert out is cached
+        assert _round_robin_exchanges(out) == []
+    finally:
+        cached.unpersist()
+
+
+def test_pipeline_triples_invariant_to_input_partitioning(spark,
+                                                          one_file_docs):
+    """The fanned-out one-file scan and an input already spread over a
+    different partition count (cached, so it is not fanned out again)
+    give the same triples."""
+    path, lex = one_file_docs
+
+    def triples(docs):
+        with run_pipeline(docs, lex, spark) as res:
+            return sorted(map(tuple, res.triples.collect()))
+
+    raw = spark.read.parquet(path)
+    assert raw.rdd.getNumPartitions() == 1
+    spread = raw.repartition(7).cache()
+    try:
+        spread.count()
+        want = triples(raw)
+        assert want
+        assert triples(spread) == want
+    finally:
+        spread.unpersist()

@@ -11,6 +11,7 @@ routes) — the batch equivalent lives in the lineage/metrics tables,
 not inside each document, so it is excluded from the shape check."""
 
 import json
+import os
 
 import pytest
 
@@ -19,6 +20,8 @@ REF_GOLDEN = "/root/reference/app/temp/dummy1_20211129.json"
 
 @pytest.fixture(scope="module")
 def golden():
+    if not os.path.exists(REF_GOLDEN):
+        pytest.skip("reference repo not available")
     with open(REF_GOLDEN) as f:
         return json.load(f)
 

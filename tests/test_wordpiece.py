@@ -13,8 +13,6 @@ Two oracle relationships:
   label-preserving end-to-end.
 """
 
-import importlib.util
-
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -23,19 +21,6 @@ from bern2_spark.operators.wordpiece import (
     CLS, NULL_TOKEN, PAD_LABEL_ID, SEP, WindowOverflowError, WordpieceVocab,
     convert_words_to_features, detokenize, extract_mentions_real,
 )
-
-REF = "/root/reference"
-
-
-def _import(path, name):
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-ref_ops = _import(f"{REF}/multi_ner/ops.py", "ref_ops_wp")
-
 
 # --------------------------------------------------------------- tokenizer
 
@@ -171,7 +156,7 @@ DETOK_CASES = [
 
 
 @pytest.mark.parametrize("toks,labs,logs", DETOK_CASES)
-def test_detokenize_matches_reference(toks, labs, logs):
+def test_detokenize_matches_reference(ref_ops, toks, labs, logs):
     ours = detokenize(toks, labs, logs)
     ref = ref_ops.detokenize(list(toks), list(labs), list(logs))
     assert ours == tuple(ref)
@@ -181,7 +166,7 @@ def test_detokenize_matches_reference(toks, labs, logs):
 @given(st.lists(st.sampled_from(
     ["alpha", "beta", "granulomatosis", "x", "betakinase"]),
     min_size=1, max_size=40))
-def test_detokenize_roundtrip_via_reference(words):
+def test_detokenize_roundtrip_via_reference(ref_ops, words):
     """Windows -> flatten (pads stripped) -> detokenize recovers the
     original words in order, and OUR detokenize == the reference's."""
     from hypothesis import assume

@@ -19,7 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402  (repo-root module; reuses session/steal helpers)
-from pyspark.sql import functions as F  # noqa: E402
 
 CONFIGS = {
     "full": dict(neural=True, abbreviations=True),
@@ -29,33 +28,20 @@ CONFIGS = {
 }
 
 
-def _docs(spark, sf_dir):
-    from bern2_spark.queries import _docs as qdocs
-    return qdocs(spark, sf_dir).select(
-        F.col("source").alias("repo"),
-        F.concat(F.lit("docs/"), F.col("doc_id").cast("string"),
-                 F.lit(".txt")).alias("path"),
-        F.sha2(F.col("doc_id").cast("string"), 256).alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"))
-
-
 def _run(spark, sf_dir, cfg) -> int:
     from bern2_spark import corpus
-    from bern2_spark.pipeline import run_pipeline
-    res = run_pipeline(_docs(spark, sf_dir), corpus.DRIVER_VOCAB_LEXICON,
-                       spark, **cfg)
+    from bern2_spark.pipeline import pipeline_input, run_pipeline
+    docs = pipeline_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    res = run_pipeline(docs, corpus.DRIVER_VOCAB_LEXICON, spark, **cfg)
     with res:
         return res.triples.count()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-    os.environ.setdefault("MALLOC_ARENA_MAX", "4")
-    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+    bench._pin_allocators()
+    from bern2_spark.session import default_cpus
+    cpus = default_cpus()
     spark = bench._session(cpus)
     warm_dir = "/root/testdata/sf0.001"
     # warm every config's plan shape at the smallest sf (JIT/codegen/

@@ -60,7 +60,7 @@ def main(argv=None) -> int:
              .getOrCreate())
 
     from bern2_spark import corpus
-    from bern2_spark.pipeline import run_pipeline
+    from bern2_spark.pipeline import pipeline_input, run_pipeline
     from bern2_spark.sources.sink import CheckpointedSink
 
     sink = CheckpointedSink(args.output)
@@ -75,17 +75,7 @@ def main(argv=None) -> int:
     from bern2_spark.sources.sink import read_input
     docs = read_input(spark, args.input)
     if "content" not in docs.columns:
-        # test-corpus shape (doc_id, text, lang, source, ...) -> the
-        # north-rule input shape run_pipeline consumes (same adapter as
-        # the flagship driver query, queries.py kg_pipeline_triples)
-        from pyspark.sql import functions as F
-        docs = docs.select(
-            F.col("source").alias("repo"),
-            F.concat(F.lit("docs/"), F.col("doc_id").cast("string"),
-                     F.lit(".txt")).alias("path"),
-            F.sha2(F.col("doc_id").cast("string"), 256).alias("commit"),
-            F.col("lang"),
-            F.col("text").alias("content"))
+        docs = pipeline_input(docs)
     if args.pipeline == "code":
         from bern2_spark.dataprep.codekg import (code_triples,
                                                  extract_defs,
