@@ -6,8 +6,9 @@ and print ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "triples": n, "triples_per_sec": r}.
 
 --scale mode: run the flagship KG pipeline at two parallelism levels
-(local[8] vs local[32] — the sandbox proxy for N vs 4N executors) and
-write BENCH/BASELINE.md with throughputs + scaling efficiency.
+(local[cpus // 4] vs local[cpus], cpus = session.default_cpus() — the
+sandbox proxy for N vs 4N executors) and write BENCH/BASELINE.md with
+throughputs + scaling efficiency.
 """
 
 from __future__ import annotations
@@ -315,16 +316,6 @@ def main() -> None:
         docs = _scale_code_corpus(spark, sf_dir, replicas).repartition(
             spark.sparkContext.defaultParallelism).persist()
         docs.count()
-        # steady-state variant: run the full-scale job once UNTIMED so
-        # the timed region measures the engine, not first-touch page
-        # faults on a ballooned hypervisor (the same warm-then-measure
-        # principle the headline bench uses; the decay mode it removes
-        # is documented in BENCH/BASELINE.md).  Off by default — the
-        # cold protocol stays the primary artifact.
-        fullwarm = os.environ.get("SPARK_GRAFT_SCALE_FULLWARM") == "1"
-        if fullwarm:
-            _run_extract_scaled(spark, docs)
-            _run_code_scaled(spark, docs)
         load0 = _wait_quiet()
         ticks = _cpu_ticks()
         ext_sec, n_mentions = _run_extract_scaled(spark, docs)
@@ -341,7 +332,6 @@ def main() -> None:
             "pipe_steal_pct": pipe_cpu["steal_pct"],
             "ext_busy_core_s": ext_cpu["busy_core_s"],
             "ext_steal_pct": ext_cpu["steal_pct"],
-            "fullwarm": fullwarm,
             "loadavg_before": load0, "loadavg_after": _loadavg()}))
         spark.stop()
         return
@@ -687,13 +677,13 @@ def scale_report(sf_dir: str, levels=None, replicas: int | None = None,
     import statistics
     import subprocess
 
-    # Default N=4 -> 4N=16: a local[K] leg runs K JVM task threads PLUS
-    # up to K python UDF workers, so local[32] demands 64 hardware
-    # threads on a 32-core shared box and anti-scales; 4->16 keeps even
-    # the hi leg (16+16) inside the box's real capacity.
+    # N -> 4N with 4N = the cores this process may use: a leg wider
+    # than the machine is oversubscribed and measures contention, not
+    # scaling
     if levels is None:
-        lv = os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "4,16")
-        levels = tuple(int(x) for x in lv.split(","))
+        from bern2_spark.session import default_cpus
+        cpus = default_cpus()
+        levels = (max(1, cpus // 4), cpus)
     # replicas sized so the parallel section dominates the ~2.4s fixed
     # per-job overhead (measured round 2): a 5s job benchmarks the
     # scheduler, a 50s job benchmarks the engine — and 100TB jobs are

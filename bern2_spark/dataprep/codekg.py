@@ -453,8 +453,7 @@ def scan_secrets(df: DataFrame,
 
 
 def shared_package_graph(imports: DataFrame, tau: float = 0.0,
-                         max_pkg_degree: int = 1000,
-                         track_persisted: list | None = None) -> DataFrame:
+                         max_pkg_degree: int = 1000) -> DataFrame:
     """Bipartite projection of the repo-package membership graph onto
     repos: weighted ``(repo_a, repo_b, shared, jaccard)`` edges between
     repos that import the same root packages — the KG-materialize step
@@ -478,7 +477,6 @@ def shared_package_graph(imports: DataFrame, tau: float = 0.0,
     # so the dense-rank pair packing costs more than it saves here
     # (see fork_candidates)
     return fork_candidates(mem, tau=tau, max_hash_degree=max_pkg_degree,
-                           track_persisted=track_persisted,
                            pack_pairs=False)
 
 

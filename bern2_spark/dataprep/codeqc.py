@@ -354,7 +354,6 @@ def strip_license_header(df: DataFrame,
 def fork_candidates(files: DataFrame, repo_col: str = "repo",
                     hash_col: str = "h", tau: float = 0.5,
                     max_hash_degree: int = 50,
-                    track_persisted: list | None = None,
                     pack_pairs: bool = True) -> DataFrame:
     """Repo-pair fork/vendor detection: Jaccard similarity of two
     repos' file-content-hash sets (the signal The Stack uses to rank
@@ -392,12 +391,7 @@ def fork_candidates(files: DataFrame, repo_col: str = "repo",
     on the bench fixture because it is worst-case DENSE (every hash
     shared by ~30 repos -> all C(1000,2) repo pairs materialize); real
     code corpora are sparse in exactly the dimension the hub cap
-    enforces.
-    The grouped table feeds two consumers (pairs + sizes) — persist
-    it; pass ``track_persisted`` for generation-scoped release (the
-    queries.py convention)."""
-    from pyspark import StorageLevel
-
+    enforces."""
     # 8-byte keys for BOTH sides of everything that shuffles in volume
     # (the LSH shingle-key discipline): the file-content hash collapses
     # to xxhash64 right at the scan — degree pass, anti-join and group
@@ -438,10 +432,7 @@ def fork_candidates(files: DataFrame, repo_col: str = "repo",
     hubs = deg.filter(F.col("_d") > max_hash_degree).select("_h")
     grouped = (f.join(F.broadcast(hubs), "_h", "left_anti")
                .groupBy("_h")
-               .agg(F.sort_array(F.collect_set("_rid")).alias("_rs"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    if track_persisted is not None:
-        track_persisted.append(grouped)
+               .agg(F.sort_array(F.collect_set("_rid")).alias("_rs")))
     sz = (grouped.select(F.explode("_rs").alias("_rid"))
           .groupBy("_rid").agg(F.count("*").alias("_n")))
     if pack_pairs:
@@ -498,8 +489,7 @@ def fork_candidates(files: DataFrame, repo_col: str = "repo",
 
 
 def curate_code_corpus(files: DataFrame, content_col: str = "content",
-                       require_permissive: bool = False,
-                       track_persisted: list | None = None):
+                       require_permissive: bool = False):
     """The composed curation pipeline — one call from a raw
     (repo, path, commit, lang, content) table to a training-ready
     corpus: Stack quality gates -> (optional) permissive-license
@@ -509,12 +499,8 @@ def curate_code_corpus(files: DataFrame, content_col: str = "content",
     card publishes.
 
     Plan: the gates are scan-fused column exprs on one pass; dedup
-    adds one window on the 32-byte content hash.  The gated frame is
-    persisted once because three consumers read it (two report counts
-    + the dedup); pass ``track_persisted`` for generation-scoped
-    release.  The report's counts are conditional aggregates over the
-    persisted frame — no extra scans of the raw input."""
-    from pyspark import StorageLevel
+    adds one window on the 32-byte content hash.  The report's counts
+    are conditional aggregates over the gated frame."""
     from pyspark.sql import Window
 
     gated = spot_license(stack_quality_features(files, content_col),
@@ -523,10 +509,7 @@ def curate_code_corpus(files: DataFrame, content_col: str = "content",
         keep = F.col("passes") & F.col("permissive")
     else:
         keep = F.col("passes")
-    gated = (gated.withColumn("_keep", keep)
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    if track_persisted is not None:
-        track_persisted.append(gated)
+    gated = gated.withColumn("_keep", keep)
 
     w = Window.partitionBy(F.md5(F.col(content_col))).orderBy(
         "repo", "path")

@@ -126,8 +126,8 @@ def minhash_signatures(docs: DataFrame = None, text_col: str = "text",
     string shingles themselves (the distinct in ``shingle_table`` is a
     full (doc_id, shingle-string) exchange that only Jaccard needs).
 
-    Pass ``shingle_df`` (a shingle_table result, possibly persisted) to
-    reuse an existing shingle relation instead."""
+    Pass ``shingle_df`` (a shingle_table result) to reuse an existing
+    shingle relation instead."""
     sh = (shingle_df if shingle_df is not None
           else shingle_rows(docs, text_col, shingle_n))
     sh = (sh
@@ -168,8 +168,8 @@ def minhash_lsh_pairs(docs: DataFrame = None, text_col: str = "text",
                       shingle_df: DataFrame = None,
                       signatures_df: DataFrame = None) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) sharing >=1 LSH bucket.
-    Pass ``signatures_df`` (a minhash_signatures result, possibly
-    persisted) to reuse an existing signature relation."""
+    Pass ``signatures_df`` (a minhash_signatures result) to reuse an
+    existing signature relation."""
     sigs = (signatures_df if signatures_df is not None
             else minhash_signatures(docs, text_col, num_hashes,
                                     shingle_n, shingle_df=shingle_df))
@@ -243,8 +243,7 @@ def ngram_jaccard_pairs(docs: DataFrame = None, candidates: DataFrame = None,
 def lsh_verified_pairs(docs: DataFrame, text_col: str = "text",
                        num_hashes: int = 16, rows_per_band: int = 4,
                        shingle_n: int = 3,
-                       threshold: float = 0.8,
-                       track_persisted: list | None = None) -> DataFrame:
+                       threshold: float = 0.8) -> DataFrame:
     """The production dedup composition: MinHash-LSH candidates ->
     exact Jaccard verify constrained by the candidate list.
 
@@ -255,7 +254,7 @@ def lsh_verified_pairs(docs: DataFrame, text_col: str = "text",
       mins map-side (see minhash_signatures), so its exchange is
       num_docs x num_hashes partial rows;
     * the VERIFY stage's set algebra runs on 8-byte ``xxhash64``
-      shingle keys: the distinct + persisted table and both verify-join
+      shingle keys: the distinct table and both verify-join
       shuffles carry (doc_id, int64) rows instead of ~3-token strings
       (~3-5x smaller rows through every exchange). Jaccard over hashed
       sets equals Jaccard over string sets modulo 2^-64 collisions; the
@@ -264,22 +263,11 @@ def lsh_verified_pairs(docs: DataFrame, text_col: str = "text",
 
     The two stages each scan the (column-pruned) corpus once.  At
     100 TB a second narrow scan of source parquet is cheaper than
-    persisting a corpus-sized string-shingle table just to share one
-    scan — the persisted artifact here is the hashed distinct table,
-    ~16 bytes/row, spillable to disk.
-
-    ``track_persisted``: pass a list to receive the persisted shingle
-    DataFrame so the caller can ``unpersist()`` it once the result is
-    materialized (same contract as apply_abbreviation_level) —
-    otherwise each invocation leaks one cached copy for the session
-    lifetime (e.g. repeated bench runs)."""
-    from pyspark import StorageLevel
+    caching a corpus-sized string-shingle table just to share one
+    scan."""
     sh = (shingle_rows(docs, text_col, shingle_n)
           .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-          .distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    if track_persisted is not None:
-        track_persisted.append(sh)
+          .distinct())
     cands = minhash_lsh_pairs(docs=docs, text_col=text_col,
                               num_hashes=num_hashes,
                               rows_per_band=rows_per_band,
@@ -442,9 +430,7 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text",
 
 def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
                                 text_col: str = "text",
-                                token_fn=None,
-                                track_persisted: list | None = None
-                                ) -> DataFrame:
+                                token_fn=None) -> DataFrame:
     """EXACT-threshold Jaccard similarity join via prefix filtering
     (Chaudhuri et al. ICDE 2006 SSJoin; Bayardo et al. WWW 2007
     AllPairs) — the deterministic complement to the MinHash/LSH family:
@@ -482,21 +468,11 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
     # result; set sizes/intersections are unchanged absent an
     # intra-pair xxhash64 collision (~n^2/2^64), and the driver's
     # string-based all-pairs oracle checks exactly that.
-    from pyspark import StorageLevel
-
     toks = (docs.select("doc_id",
                         F.explode(F.transform(token_fn(F.col(text_col)),
                                               lambda x: F.xxhash64(x)))
                         .alias("tok"))
-            .distinct()
-            # three consumers (frequency table, per-doc prefix arrays,
-            # both verify-join sides) — persist the 16-byte hashed rows
-            # once instead of recomputing tokenize+distinct per
-            # consumer (the dedup_lsh_verified sharing pattern; the
-            # persisted artifact is hash rows, never shingle strings)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    if track_persisted is not None:
-        track_persisted.append(toks)
+            .distinct())
     freq = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     per_doc = (toks.join(freq, "tok")
                .groupBy("doc_id")
@@ -614,8 +590,7 @@ def containment_pairs(docs: DataFrame = None,
 
 def minhash_calibration(docs: DataFrame, text_col: str = "text",
                         num_hashes: int = 16, rows_per_band: int = 4,
-                        shingle_n: int = 3, round_to: int = 6,
-                        track_persisted: list | None = None
+                        shingle_n: int = 3, round_to: int = 6
                         ) -> DataFrame:
     """Estimator-calibration report for the MinHash pipeline: for every
     LSH candidate pair, the SKETCH-estimated Jaccard (fraction of
@@ -637,22 +612,12 @@ def minhash_calibration(docs: DataFrame, text_col: str = "text",
     Output: (doc_a, doc_b, est_jaccard, jaccard, abs_err)."""
     # the exact lsh_verified_pairs shuffle posture: the signature
     # stage explodes straight off the scan (its only exchange is the
-    # map-side-combined element-wise min), the verify stage's set
-    # algebra runs on an 8-byte xxhash64 distinct table, and — new
-    # here — the signature TABLE itself is persisted because four
-    # consumers reference it (bands, both per-side attaches, the slot
-    # comparison); it is tiny (n_docs x num_hashes hashes)
-    from pyspark import StorageLevel
-    sigs = minhash_signatures(docs, text_col, num_hashes, shingle_n) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    if track_persisted is not None:
-        track_persisted.append(sigs)
+    # map-side-combined element-wise min) and the verify stage's set
+    # algebra runs on an 8-byte xxhash64 distinct table
+    sigs = minhash_signatures(docs, text_col, num_hashes, shingle_n)
     sh = (shingle_rows(docs, text_col, shingle_n)
           .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-          .distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    if track_persisted is not None:
-        track_persisted.append(sh)
+          .distinct())
     cands = minhash_lsh_pairs(rows_per_band=rows_per_band,
                               signatures_df=sigs)
     est = (cands
@@ -677,8 +642,7 @@ def minhash_calibration(docs: DataFrame, text_col: str = "text",
 
 
 def dedup_funnel(docs: DataFrame, text_col: str = "text",
-                 threshold: float = 0.5, round_to: int = 6,
-                 track_persisted: list | None = None) -> DataFrame:
+                 threshold: float = 0.5, round_to: int = 6) -> DataFrame:
     """Stage-by-stage dedup retention report — the documents-table
     twin of the code corpus's curation funnel: raw count → exact-hash
     survivors (min doc_id per md5 keeps the first copy) → near-dup
@@ -688,7 +652,7 @@ def dedup_funnel(docs: DataFrame, text_col: str = "text",
     know what fraction of the corpus each stage cost.
 
     Scale shape: strictly composed from the production plans (md5
-    groupBy; the persisted-shingle LSH verify), each stage reduced to
+    groupBy; the hashed-shingle LSH verify), each stage reduced to
     a 1-row count and cross-joined against the 1-row raw total — the
     report itself never shuffles anything new.
 
@@ -702,8 +666,7 @@ def dedup_funnel(docs: DataFrame, text_col: str = "text",
                   .filter(F.col("_rk") == 1).drop("_h", "_rk"))
     exact_n = keep_exact.agg(F.count("*").cast("long").alias("n_docs"))
     pairs = lsh_verified_pairs(keep_exact, text_col=text_col,
-                               threshold=threshold,
-                               track_persisted=track_persisted)
+                               threshold=threshold)
     near_drop = (pairs.select(F.col("doc_b").alias("doc_id"))
                  .distinct()
                  .agg(F.count("*").cast("long").alias("n_drop")))
@@ -730,8 +693,8 @@ def dedup_funnel(docs: DataFrame, text_col: str = "text",
 
 def threshold_curve(docs: DataFrame, text_col: str = "text",
                     thresholds=(0.5, 0.7, 0.9),
-                    num_hashes: int = 16, rows_per_band: int = 4,
-                    track_persisted: list | None = None) -> DataFrame:
+                    num_hashes: int = 16, rows_per_band: int = 4
+                    ) -> DataFrame:
     """Near-dup threshold-tuning curve: how many verified pairs (and
     docs-to-drop) survive at each candidate Jaccard threshold, from
     ONE LSH + exact-verify pass — the artifact that picks the dedup
@@ -749,8 +712,7 @@ def threshold_curve(docs: DataFrame, text_col: str = "text",
     scored = lsh_verified_pairs(docs, text_col=text_col,
                                 num_hashes=num_hashes,
                                 rows_per_band=rows_per_band,
-                                threshold=0.0,
-                                track_persisted=track_persisted)
+                                threshold=0.0)
     th = F.array(*[F.lit(float(t)) for t in thresholds])
     hit = (scored.select(
         "doc_b", F.explode(F.filter(

@@ -20,6 +20,20 @@ from pyspark.sql import functions as F
 
 _UNROLL_MAX = 16  # see _dot: bigger chains trip HotSpot's 8KB JIT refusal
 
+# Largest query side the search operators collect to the driver (it
+# ships with every task closure, so it must stay small)
+MAX_QUERY_ROWS = 100_000
+
+
+def _collect_query_side(df: DataFrame, op: str) -> list:
+    """``df``'s rows on the driver; ValueError naming ``op`` when there
+    are more than MAX_QUERY_ROWS."""
+    rows = df.limit(MAX_QUERY_ROWS + 1).collect()
+    if len(rows) > MAX_QUERY_ROWS:
+        raise ValueError(f"{op}: query side has more than "
+                         f"{MAX_QUERY_ROWS} rows to collect")
+    return rows
+
 
 def _dot(a, b, dim: int | None = None):
     """Left-to-right multiply-add fold ``((0.0 + a1*b1) + a2*b2) + ...``.
@@ -199,7 +213,8 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Only narrow per-batch top-k candidate rows (a superset of the
     global top-k) reach the rank exchange: the vectors never
     shuffle."""
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = _collect_query_side(queries.select(id_col, vec_col),
+                                 "brute_force_topk")
     cand = _pair_candidates(corpus, q_rows, k=k, id_col=id_col,
                             vec_col=vec_col,
                             q_id_type=_id_type(queries, id_col),
@@ -553,8 +568,9 @@ def lsh_multiprobe_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # the exploded (query, probed-bucket) rows are collected into
     # per-query bucket bitmasks for the batched numpy scorer — the
     # candidate pair set is exactly the former bucket-join's.
-    pq_rows = (probed_queries()
-               .select("query_id", "q_vec", "bucket").collect())
+    pq_rows = _collect_query_side(
+        probed_queries().select("query_id", "q_vec", "bucket"),
+        "lsh_multiprobe_topk")
     probe_bits: dict = {}
     q_vecs: dict = {}
     for r in pq_rows:
@@ -620,10 +636,11 @@ def lsh_bucketed_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # (bit-identical fold/sign) on the tiny query side, then collects
     # into the batched numpy scorer; candidate pairs = same-bucket
     # co-residents, exactly the former broadcast bucket-join's set
-    q_rows3 = (queries.select(id_col, vec_col,
-                              sign_lsh_bucket(F.col(vec_col), planes)
-                              .alias("bucket"))
-               .collect())
+    q_rows3 = _collect_query_side(
+        queries.select(id_col, vec_col,
+                       sign_lsh_bucket(F.col(vec_col), planes)
+                       .alias("bucket")),
+        "lsh_bucketed_topk")
     probe = {r[0]: {int(r[2])} for r in q_rows3}
     c = corpus.withColumn("_lsh_bucket",
                           sign_lsh_bucket(F.col(vec_col), planes))
@@ -999,7 +1016,8 @@ def range_search(corpus: DataFrame, queries: DataFrame, tau: float,
     engines' float summation order.
 
     Output: (query_id, neighbor_id, cosine) with cosine rounded."""
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = _collect_query_side(queries.select(id_col, vec_col),
+                                 "range_search")
     # conservative floor: anything that could round (HALF_UP, 6 dp) to
     # >= tau survives the batch stage; the authoritative rounded
     # comparison below is the same JVM round/filter as before

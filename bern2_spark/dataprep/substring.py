@@ -71,9 +71,7 @@ def kgram_table(docs: DataFrame, text_col: str = "text",
 
 
 def duplicate_kgram_spans(docs: DataFrame, text_col: str = "text",
-                          k: int = 5, min_docs: int = 2,
-                          track_persisted: list | None = None
-                          ) -> DataFrame:
+                          k: int = 5, min_docs: int = 2) -> DataFrame:
     """Maximal duplicated token spans per document.
 
     A k-gram is *duplicated* when it occurs in >= ``min_docs`` distinct
@@ -82,20 +80,11 @@ def duplicate_kgram_spans(docs: DataFrame, text_col: str = "text",
     is emitted as ``(doc_id, span_start, span_end, n_tokens)`` in
     1-based inclusive token indices.  This recovers exactly the maximal
     duplicated runs the suffix-array formulation finds, for runs of
-    length >= k.
-
-    ``track_persisted``: pass a list to share the gram table between
-    the duplicate-hash aggregation and the flag-back join via a
-    persist — otherwise the corpus is scanned and tokenized twice
-    (acceptable when the scan is cheap parquet; at 100 TB persist the
-    gram table instead and unpersist it after materialization, the
-    same contract as lsh_verified_pairs).
+    length >= k.  The gram table feeds both the duplicate-hash
+    aggregation and the flag-back join, so the corpus is scanned and
+    tokenized twice.
     """
     grams = kgram_table(docs, text_col, k)
-    if track_persisted is not None:
-        from pyspark import StorageLevel
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-        track_persisted.append(grams)
     dup = (grams.groupBy("gram_hash")
            .agg(F.count_distinct("doc_id").alias("nd"))
            .filter(F.col("nd") >= min_docs)

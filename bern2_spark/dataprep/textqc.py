@@ -429,8 +429,8 @@ def blocklist_filter(docs: DataFrame, blocklist,
 
 def lm_cross_entropy(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", bucket_hex: int = 3,
-                     smoothing: float = 1.0, round_to: int | None = 9,
-                     track_persisted: list | None = None) -> DataFrame:
+                     smoothing: float = 1.0, round_to: int | None = 9
+                     ) -> DataFrame:
     """Per-doc cross-entropy under a hashed-bigram LM estimated from
     the corpus itself — the CCNet/KenLM-style perplexity quality
     signal (Wenzek et al. 2020): fluent text full of common
@@ -451,10 +451,8 @@ def lm_cross_entropy(docs: DataFrame, text_col: str = "text",
     count tables collapse to at most V rows via map-side combine and
     join back BROADCAST, so scoring is narrow and the corpus text
     never shuffles.  The exploded table has two consumers (counting
-    and scoring) — pass ``track_persisted`` for generation-scoped
-    release, else it is rescanned (documented-cheap: the scan is the
+    and scoring); it is recomputed for each (cheap: the scan is the
     tokenizer, all codegen)."""
-    from pyspark import StorageLevel
     from pyspark.sql.functions import broadcast
 
     from bern2_spark.dataprep.dedup import (norm_tokens,
@@ -473,9 +471,6 @@ def lm_cross_entropy(docs: DataFrame, text_col: str = "text",
                      F.substring(
                          F.md5(F.element_at(F.split("_gram", " "), 1)),
                          1, bucket_hex).alias("_pb")))
-    if track_persisted is not None:
-        feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-        track_persisted.append(feats)
     bc = feats.groupBy("_bb").agg(F.count("*").alias("_cb"))
     pc = feats.groupBy("_pb").agg(F.count("*").alias("_cp"))
     nll = F.log((F.col("_cp") + F.lit(s * n_buckets))

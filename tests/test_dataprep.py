@@ -39,21 +39,6 @@ def test_ngram_jaccard(spark, docs):
     assert 0.1 <= out[(1, 3)] < 1.0
 
 
-def test_lsh_verified_track_persisted(spark, docs):
-    """lsh_verified_pairs exposes its internal shingle persist through
-    track_persisted (same contract as apply_abbreviation_level) so the
-    caller can unpersist after materialization instead of leaking the
-    cache entry for the session lifetime."""
-    from bern2_spark.dataprep.dedup import lsh_verified_pairs
-    handles = []
-    out = lsh_verified_pairs(docs, threshold=0.5, track_persisted=handles)
-    assert {(r.doc_a, r.doc_b) for r in out.collect()} >= {(1, 2)}
-    assert len(handles) == 1
-    assert handles[0].storageLevel.useMemory
-    handles[0].unpersist()
-    assert not handles[0].storageLevel.useMemory
-
-
 def test_simhash64_identical_and_near(spark, docs):
     from bern2_spark.dataprep.dedup import simhash_sketches
     sk = {r.doc_id: r.simhash for r in simhash_sketches(docs).collect()}
@@ -87,6 +72,27 @@ def test_brute_force_topk_and_lsh_recall(spark):
     # LSH path returns a subset-quality result: same schema, sane ranks
     approx = lsh_bucketed_topk(emb, queries, k=3, n_bits=4).collect()
     assert all(1 <= r.rank <= 3 for r in approx)
+
+
+def test_query_side_collect_is_bounded(spark, monkeypatch):
+    """Every search operator that collects its query side to the driver
+    refuses one larger than MAX_QUERY_ROWS, naming itself."""
+    from bern2_spark.dataprep import similarity as sim
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(64)])
+         for i in range(10)], "vec_id long, embedding array<double>")
+    queries = emb.filter(F.col("vec_id") < 5)
+    monkeypatch.setattr(sim, "MAX_QUERY_ROWS", 4)
+    for op in (lambda: sim.brute_force_topk(emb, queries, k=3),
+               lambda: sim.lsh_multiprobe_topk(emb, queries, k=3),
+               lambda: sim.lsh_bucketed_topk(emb, queries, k=3),
+               lambda: sim.range_search(emb, queries, tau=0.9)):
+        with pytest.raises(ValueError, match=r"^\w+: query side has "
+                           r"more than 4 rows"):
+            op()
+    # at the bound, the query side passes: 3 neighbours for each query
+    four = queries.filter(F.col("vec_id") < 4)
+    assert sim.brute_force_topk(emb, four, k=3).count() == 12
 
 
 def test_multimodal_plumbing(spark, docs):
@@ -1234,10 +1240,7 @@ def test_negative_samples_deterministic_and_flagged(spark):
 
 def test_curate_code_corpus_composed(spark, code_files):
     from bern2_spark.dataprep.codeqc import curate_code_corpus
-    tracked = []
-    kept, report = curate_code_corpus(code_files,
-                                      require_permissive=True,
-                                      track_persisted=tracked)
+    kept, report = curate_code_corpus(code_files, require_permissive=True)
     rows = kept.collect()
     # only the clean MIT file and the clean Apache file pass both
     # gates; the dup pair fails the license gate entirely
@@ -1247,8 +1250,6 @@ def test_curate_code_corpus_composed(spark, code_files):
     assert rep["2_quality"] == 4   # a.py, e.rs, f.py, g.py
     assert rep["3_license"] == 2   # permissive gate
     assert rep["4_unique"] == 2
-    for df in tracked:
-        df.unpersist()
     # without the license gate the dup pair survives as ONE copy,
     # kept at the lexicographically-first (repo, path)
     kept2, rep2 = curate_code_corpus(code_files)
