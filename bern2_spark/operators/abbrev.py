@@ -8,8 +8,8 @@ Schwartz–Hearst algorithm (Schwartz & Hearst, PSB 2003: candidate
 "long form (SF)" pairs validated by scanning the long form right-to-
 left for the short form's characters) as a pandas UDF producing a
 per-document (short_form -> long_form) table, which then becomes one
-more broadcast-join sieve level: a CUI-less mention whose surface is a
-known short form retries the lexicon with its long form.
+more sieve level: a CUI-less mention whose surface is a known short
+form retries the lexicon with its long form, in the same row.
 """
 
 from __future__ import annotations
@@ -148,37 +148,32 @@ def apply_abbreviation_level(normalized: DataFrame, lexicon_df: DataFrame,
                              abbrevs: DataFrame,
                              track_persisted: list | None = None,
                              lut: dict | None = None) -> DataFrame:
-    """Full abbreviation sieve level: re-run the lexicon sieve on the
-    LONG form of CUI-less short-form mentions, keep the original
-    surface/span, and adopt the long form's CUI on a hit.
+    """Full abbreviation sieve level: a CUI-less mention whose surface
+    is a document-local short form retries the sieve with its LONG
+    form, keeps its original surface/span, and adopts the long form's
+    CUI on a hit.
 
-    Scale note: both the abbreviation table and the retried-mentions
-    result are corpus-proportional, so neither join carries a broadcast
-    hint — they are doc-/mention-keyed equi-joins that AQE plans as
-    broadcast only while the build side is actually small."""
-    from bern2_spark.operators.normalize import normalize_mentions
+    The retry runs in-row — ``sieve_cui`` on the ``long_form`` column
+    ``expand_cuiless_mentions`` attached, with the main pass's ``lut``
+    plans, so its broadcasts are ReusedExchanges. Only rows whose
+    document defines the short form carry a long form (a data-induced
+    predicate); the rest have null keys and probe nothing.
 
-    # the abbreviation table is consumed by two subtrees (the expand
-    # join and, transitively, the retried sieve) — persist so its
-    # full-corpus mapInPandas pass executes once
+    The abbreviation table is persisted (and appended to
+    ``track_persisted``) so its mapInPandas pass runs once even when
+    the caller reads the table again."""
+    from bern2_spark.operators.normalize import (
+        build_lookup_tables, sieve_cui,
+    )
+
     abbrevs = abbrevs.persist()
     if track_persisted is not None:
         track_persisted.append(abbrevs)
     exp = expand_cuiless_mentions(normalized, abbrevs)
-    retry_in = (exp
-                .filter((F.col("cui") == CUI_LESS)
-                        & F.col("long_form").isNotNull())
-                .select("doc_id", "mention_id", "ent_type", "start", "end",
-                        F.col("long_form").alias("mention"), "prob",
-                        "mutation_type", "normalized_name"))
-    retried = (normalize_mentions(retry_in, lexicon_df, lut=lut)
-               .select(F.col("mention_id").alias("_r_id"),
-                       F.col("cui").alias("_r_cui")))
-    out = exp.drop("long_form").join(retried,
-                                     F.col("mention_id") == F.col("_r_id"),
-                                     "left").drop("_r_id")
+    retried = sieve_cui(exp, lut or build_lookup_tables(lexicon_df),
+                        "long_form", "_r_cui")
     new_cui = F.when(
-        (F.col("cui") == CUI_LESS) & F.col("_r_cui").isNotNull()
+        (F.col("cui") == CUI_LESS) & F.col("long_form").isNotNull()
         & (F.col("_r_cui") != CUI_LESS), F.col("_r_cui")
     ).otherwise(F.col("cui"))
-    return out.withColumn("cui", new_cui).drop("_r_cui")
+    return retried.withColumn("cui", new_cui).drop("long_form", "_r_cui")

@@ -1,37 +1,6 @@
-"""Metrics / lineage side-outputs. Operators A1, A5, A6 of SURVEY §2.4
-plus per-partition lineage rows (north rule: per-partition lineage +
-metrics). All plain hash aggregations — partial map-side combine free."""
+"""KG profiling metrics over the triple store."""
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from bern2_spark.schemas import CUI_LESS
-
-
-def entity_counts(mentions: DataFrame) -> DataFrame:
-    """A1 — num_entities per doc (multi_ner/ner_server.py:11-19)."""
-    return (mentions.groupBy("doc_id")
-            .agg(F.count("*").alias("num_entities")))
-
-
-def cuiless_rate(normalized: DataFrame) -> DataFrame:
-    """A5 — per-type CUI-less fraction (bern2/normalizer.py:429-441)."""
-    return (normalized.groupBy("ent_type")
-            .agg(F.count("*").alias("n_mentions"),
-                 F.avg((F.col("cui") == CUI_LESS).cast("int"))
-                  .alias("cuiless_frac")))
-
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition lineage rows: (stage, partition, rows). Cheap
-    observability at any scale — one count per partition, no shuffle of
-    the data itself."""
-    return (df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .select("stage", "partition_id", "rows"))
 
 
 def predicate_functionality(triples, subj_col="subj", pred_col="pred",

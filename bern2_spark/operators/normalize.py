@@ -214,7 +214,24 @@ def normalize_mentions(mentions: DataFrame, lexicon: DataFrame,
                        gene_taxa: Optional[DataFrame] = None,
                        gene_context: Optional[DataFrame] = None,
                        lut: Optional[dict] = None) -> DataFrame:
-    """MENTIONS -> NORMALIZED (adds cui, is_neural_normalized=false).
+    """MENTIONS -> NORMALIZED (adds cui, is_neural_normalized=false):
+    ``sieve_cui`` on the mention surface.
+
+    ``lut``: pre-built ``build_lookup_tables`` result — pass it when
+    the same lexicon is probed again in one plan (the abbreviation
+    retry does) so both probes share one set of LUT plans and their
+    broadcasts dedupe into ReusedExchanges."""
+    if lut is None:
+        lut = build_lookup_tables(lexicon)
+    return (sieve_cui(mentions, lut, "mention", "cui", gene_taxa,
+                      gene_context)
+            .withColumn("is_neural_normalized", F.lit(False)))
+
+
+def sieve_cui(m: DataFrame, lut: dict, surface: str, out: str,
+              gene_taxa: Optional[DataFrame] = None,
+              gene_context: Optional[DataFrame] = None) -> DataFrame:
+    """Adds column ``out``: the sieve's cui for the ``surface`` column.
 
     Seven broadcast left joins (exact, lower, tmchem, biosyn, stemmed,
     numbers, subject/object-swap — the Sieve cascade in priority order)
@@ -222,21 +239,14 @@ def normalize_mentions(mentions: DataFrame, lexicon: DataFrame,
     pass through with their tmVar-normalized name as cui. When
     ``gene_taxa`` (taxid, name, cui) is given, gene surfaces first probe
     the taxon-aware dictionary under the doc's ``gene_context`` (default
-    human 9606, like the reference's jar argument).
-
-    ``lut``: pre-built ``build_lookup_tables`` result — pass it when
-    normalizing more than once against the same lexicon (the
-    abbreviation retry does) so the seven groupBy+broadcast LUT builds
-    run once per pipeline, not once per call."""
-    if lut is None:
-        lut = build_lookup_tables(lexicon)
-
+    human 9606, like the reference's jar argument). A null surface
+    yields null keys, which probe nothing."""
     # P13 applied to the gene join key only (surface column unchanged)
-    m = mentions.withColumn(
+    m = m.withColumn(
         "k_surface",
         F.when(F.col("ent_type") == "gene",
-               strip_gene_suffix(F.col("mention")))
-         .otherwise(F.col("mention")))
+               strip_gene_suffix(F.col(surface)))
+         .otherwise(F.col(surface)))
 
     def lkp(df, table, suffix, key_col):
         t = lut[table].select(
@@ -329,8 +339,7 @@ def normalize_mentions(mentions: DataFrame, lexicon: DataFrame,
                        F.element_at(F.split(raw_cui, "-"), 1)))
         .otherwise(raw_cui))
 
-    return (m.withColumn("cui", cui)
-             .withColumn("is_neural_normalized", F.lit(False))
+    return (m.withColumn(out, cui)
              .drop("k_surface", "k_bio", "k_stem", "k_num", "k_swap",
                    "cui_exact", "cui_lower", "cui_tmchem",
                    "cui_biosyn", "cui_stem", "cui_num", "cui_swap",

@@ -22,7 +22,6 @@ from bern2_spark.operators.canonicalize import (
     order_output, resolve_overlap, union_mutations,
 )
 from bern2_spark.operators.filters import filter_species_human
-from bern2_spark.operators.metrics import cuiless_rate, entity_counts
 from bern2_spark.operators.mutations import detect_mutations
 from bern2_spark.operators.normalize import normalize_mentions
 from bern2_spark.operators.neural import neural_normalize
@@ -95,13 +94,20 @@ def run_pipeline(documents: DataFrame,
     # the scan is already wide and no repartition is added.
     documents = _fan_out_narrow_scan(documents, spark)
 
-    persisted = []
-    # THREE plan branches consume the preprocessed docs (tagger,
-    # mutation battery, abbreviation table) — unpersisted, each branch
-    # re-executes the scan + preprocess + fan-out shuffle, and on a
-    # narrow source that subtree is the pipeline's serial section.
+    # Four caches, one per subtree that more than one consumer reads:
+    # * pre — the tagger, the mutation battery, the abbreviation table
+    #   and the quarantine side-output all scan it; unpersisted, each
+    #   re-runs the scan + preprocess + fan-out shuffle;
+    # * the abbreviation table (apply_abbreviation_level);
+    # * ner_norm after the abbreviation level — the neural stage reads
+    #   it for distinct surfaces AND as its join-back left side;
+    # * annotations — both sink writes (triples and annotations) read
+    #   it, so the neural pass, W1 and to_annotations run once.
+    # The main sieve and the abbreviation retry share one plan (no
+    # cache between them), so the retry's LUT broadcasts are reused.
     # MEMORY_AND_DISK: at real scale the corpus spills instead of OOMing.
     from pyspark import StorageLevel
+    persisted = []
     pre = preprocess(documents).persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(pre)
 
@@ -112,22 +118,15 @@ def run_pipeline(documents: DataFrame,
     muts = detect_mutations(pre)
 
     # Stage 4+5 on NER mentions; mutations carry tmVar normalization.
-    # The seven sieve LUT plans are built ONCE and shared between the
-    # main sieve and the abbreviation retry: identical broadcast
-    # subtrees then dedupe via ReusedExchange instead of re-running
-    # their groupBys. (Deliberately NOT persisted: caching tiny LUTs
-    # replaces free exchange reuse with per-run cache-materialization
-    # jobs — measured 2x worse on the flagship.)
+    # The sieve LUT plans are built ONCE and shared between the main
+    # sieve and the abbreviation retry: identical broadcast subtrees
+    # then dedupe via ReusedExchange instead of re-running their
+    # groupBys. (Deliberately NOT persisted: caching tiny LUTs replaces
+    # free exchange reuse with per-run cache-materialization jobs —
+    # measured 2x worse on the flagship.)
     from bern2_spark.operators.normalize import build_lookup_tables
     lut = build_lookup_tables(lexicon_df)
     ner_norm = normalize_mentions(ner, lexicon_df, lut=lut)
-    # Downstream stages consume this subtree several times (the
-    # abbreviation level joins it against a retried copy of itself; the
-    # neural stage reads it for distinct surfaces AND as the join-back
-    # left side). Persist once so the segment+tag UDF runs exactly once.
-    if abbreviations or neural:
-        ner_norm = ner_norm.persist()
-        persisted.append(ner_norm)
     if abbreviations:
         # M4/J3 abbreviation level: Schwartz–Hearst short->long forms,
         # CUI-less short-form mentions retry the sieve with long forms
@@ -137,7 +136,7 @@ def run_pipeline(documents: DataFrame,
         ner_norm = apply_abbreviation_level(
             ner_norm, lexicon_df, abbreviation_table(pre),
             track_persisted=persisted, lut=lut)
-        # the expanded tree again feeds two consumers below
+    if abbreviations or neural:
         ner_norm = ner_norm.persist()
         persisted.append(ner_norm)
     if neural:
@@ -159,6 +158,8 @@ def run_pipeline(documents: DataFrame,
     annotations = to_annotations(canonical)
     if ordered:
         annotations = order_output(annotations)
+    annotations = annotations.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.append(annotations)
     triples = to_triples(annotations)
 
     from bern2_spark.operators.preprocess import quarantine as _quarantine
@@ -189,10 +190,3 @@ def run_synthetic(spark: SparkSession, n_docs: int = 200, seed: int = 42,
     lex = corpus.make_lexicon(seed)
     docs = corpus.documents_df(spark, n_docs, seed, lex)
     return run_pipeline(docs, lex, spark, **kw)
-
-
-def metrics(result: PipelineResult) -> dict:
-    return {
-        "entity_counts": entity_counts(result.mentions),
-        "cuiless_rate": cuiless_rate(result.normalized),
-    }

@@ -4069,7 +4069,7 @@ c AS (
 ),
 p AS (
   SELECT doc_id, wt,
-         (cum * 50) // W - ((cum - wt) * 50) // W AS picks
+         CAST((cum * 50) // W - ((cum - wt) * 50) // W AS BIGINT) AS picks
   FROM c
 )
 SELECT doc_id, wt AS n_chars, picks FROM p WHERE picks > 0
@@ -4131,11 +4131,11 @@ def qc_gopher_rules(spark, sf_dir):
 SELECT event_id, user_id, session_idx
 FROM (
   SELECT event_id, user_id, ts,
-         sum(CASE WHEN prev IS NULL
-                    OR epoch_us(ts) - epoch_us(prev) > 1800000000
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS session_idx
+         CAST(sum(CASE WHEN prev IS NULL
+                         OR epoch_us(ts) - epoch_us(prev) > 1800000000
+                       THEN 1 ELSE 0 END)
+                OVER (PARTITION BY user_id ORDER BY ts, event_id)
+              AS BIGINT) AS session_idx
   FROM (SELECT event_id, user_id, ts,
                lag(ts) OVER (PARTITION BY user_id
                              ORDER BY ts, event_id) AS prev
@@ -4478,7 +4478,8 @@ per AS (SELECT repo, license, count(*) AS n_files FROM spot
         WHERE license IS NOT NULL GROUP BY 1, 2),
 ranked AS (
   SELECT repo, license, n_files,
-         sum(n_files) OVER (PARTITION BY repo) AS n_licensed,
+         CAST(sum(n_files) OVER (PARTITION BY repo) AS BIGINT)
+           AS n_licensed,
          row_number() OVER (PARTITION BY repo ORDER BY
            CASE license WHEN 'GPL-3.0-only' THEN 4
                 WHEN 'Apache-2.0' THEN 3 WHEN 'BSD-3-Clause' THEN 2
@@ -5011,8 +5012,8 @@ def mix_rendezvous_shards(spark, sf_dir):
 
 @q("mix_pack_sequences", """
 SELECT doc_id, n_chars,
-       start // 4096 AS seq_id,
-       start % 4096 AS seq_offset
+       CAST(start // 4096 AS BIGINT) AS seq_id,
+       CAST(start % 4096 AS BIGINT) AS seq_offset
 FROM (
   SELECT doc_id, n_chars,
          sum(n_chars) OVER (ORDER BY doc_id
@@ -7280,7 +7281,8 @@ def kg_fuzzy_link(spark, sf_dir):
 @q("events_gapfill", """
 WITH ev AS (
   SELECT user_id, date_trunc('day', ts) AS bucket,
-         sum(CAST(round(value * 1e6) AS BIGINT)) AS value_micros
+         CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS BIGINT)
+           AS value_micros
   FROM events GROUP BY 1, 2),
 span AS (SELECT user_id, min(bucket) AS lo, max(bucket) AS hi
          FROM ev GROUP BY 1),
@@ -7505,7 +7507,8 @@ z AS (
                          / sqrt((s2 - s1 * s1 / n) / n), 6)
          END AS z
   FROM w)
-SELECT user_id, CAST(bucket AS DATE) AS day, value_micros, n_base, z,
+SELECT user_id, CAST(bucket AS DATE) AS day,
+       CAST(value_micros AS BIGINT) AS value_micros, n_base, z,
        coalesce(abs(z) > 2.0, FALSE) AS is_anomaly
 FROM z
 """)
@@ -7778,7 +7781,8 @@ sc AS (SELECT user_id, recency_days, frequency, monetary_micros,
                     / (hi_m - lo_m + 1)) AS BIGINT), 2) AS INT)
              AS m_score
        FROM p2, rng)
-SELECT user_id, recency_days, frequency, monetary_micros,
+SELECT user_id, recency_days, frequency,
+       CAST(monetary_micros AS BIGINT) AS monetary_micros,
        r_score, f_score, m_score,
        CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
            || CAST(m_score AS VARCHAR) AS rfm

@@ -12,9 +12,10 @@ against already-committed output, processing only the remainder.
 Output layout under ``base_dir``:
     annotations/_run=<k>/           partitioned by obj (entity type)
     triples/_run=<k>/               partitioned by pred
-    <stage>/_run=<k>/_lineage/      per-partition row counts for that
-                                    snapshot (committed atomically with
-                                    it — orphans invisible)
+    <stage>/_run=<k>/_lineage/      one row count per data file of that
+                                    snapshot, read from the file's
+                                    parquet footer (committed atomically
+                                    with it — orphans invisible)
     manifests/<stage>.json
 """
 
@@ -27,8 +28,6 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from bern2_spark.operators.metrics import partition_lineage
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -71,11 +70,6 @@ class CheckpointedSink:
     def _path(self, name: str) -> str:
         return os.path.join(self.base_dir, name)
 
-    def stage_path(self, name: str) -> str:
-        """Public accessor for a stage's snapshot root (the basePath a
-        partitioned read of its committed runs uses)."""
-        return self._path(name)
-
     def manifest_path(self, stage: str) -> str:
         return os.path.join(self.base_dir, "manifests", f"{stage}.json")
 
@@ -97,6 +91,13 @@ class CheckpointedSink:
         return [r["path"] for r in self._manifest(stage)["runs"]
                 if "path" in r]
 
+    def committed_rows(self, stage: str) -> Optional[int]:
+        """Rows across the stage's committed runs, summed from the
+        manifest (no Spark job); None when a run recorded no count
+        (written with ``lineage=False`` or through a catalog)."""
+        rows = [r["rows"] for r in self._manifest(stage)["runs"]]
+        return None if None in rows else sum(rows)
+
     def write_stage(self, df: DataFrame, stage: str,
                     partition_by: Optional[List[str]] = None,
                     lineage: bool = True) -> str:
@@ -111,23 +112,22 @@ class CheckpointedSink:
         # key=value dir name: snapshots read back as one partitioned
         # table (basePath = stage root) with _run as a lineage column
         path = os.path.join(self._path(stage), f"_run={run_id}")
-        writer = df.write.mode("overwrite")
+        writer = df.write
         if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        n_rows = None
-        if lineage:
-            # lineage lives INSIDE the run dir (underscore-prefixed, so
-            # data reads skip it): a crash before the manifest commit
-            # leaves the rows as invisible as the uncommitted snapshot,
-            # and a retried run's overwrite wipes them — no double
-            # counting (lineage readers go through read_lineage, which
-            # only sees manifest-committed runs)
-            lin = partition_lineage(
-                df.sparkSession.read.parquet(path), stage)
-            lin.write.mode("overwrite").parquet(
-                os.path.join(path, "_lineage"))
-            n_rows = lin.agg(F.sum("rows")).first()[0] or 0
+            # AQE's write rebalance: rows clustered by the partition
+            # columns, small partitions coalesced and skewed ones split,
+            # so each partition value gets a few files instead of one
+            # per (task, value)
+            writer = (df.hint("rebalance", *partition_by).write
+                      .partitionBy(*partition_by))
+        writer.mode("overwrite").parquet(path)
+        # lineage lives INSIDE the run dir (underscore-prefixed, so data
+        # reads skip it): a crash before the manifest commit leaves the
+        # rows as invisible as the uncommitted snapshot, and a retried
+        # run's overwrite wipes them — no double counting (lineage
+        # readers go through read_lineage, which only sees
+        # manifest-committed runs)
+        n_rows = _write_file_lineage(path, stage) if lineage else None
         manifest["runs"].append({
             "run_id": run_id, "path": path, "rows": n_rows,
             "partition_by": partition_by or [],
@@ -212,6 +212,29 @@ class CheckpointedSink:
     @staticmethod
     def _doc_column(stage: str) -> str:
         return "subj" if stage == "triples" else "doc_id"
+
+
+def _write_file_lineage(path: str, stage: str) -> int:
+    """Lineage from what the write committed: one (stage, partition_id,
+    rows) row per data file, ``partition_id`` the file's ordinal in
+    sorted path order and ``rows`` its parquet footer's row count (the
+    record_count an Iceberg manifest keeps per data file). Written
+    with pyarrow, so no Spark job reads the snapshot back. Returns the
+    snapshot's total row count."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    # dataset discovery skips '_'/'.'-prefixed paths, as Spark's reader
+    # does: _SUCCESS, checksums and _lineage are not data files
+    files = sorted(ds.dataset(path, format="parquet").files)
+    counts = [pq.read_metadata(f).num_rows for f in files]
+    os.makedirs(os.path.join(path, "_lineage"))
+    pq.write_table(pa.table({
+        "stage": pa.array([stage] * len(counts), pa.string()),
+        "partition_id": pa.array(range(len(counts)), pa.int32()),
+        "rows": pa.array(counts, pa.int64())}),
+        os.path.join(path, "_lineage", "part-00000.parquet"))
+    return sum(counts)
 
 
 def write_outputs(sink: CheckpointedSink, annotations: DataFrame,

@@ -52,6 +52,37 @@ def _norm_cell(v):
 CACHE_OWNERS = {"kg_pipeline_triples", "kg_pubannotation"}
 
 
+# Column-type families the two engines must agree on. HUGEINT (DuckDB's
+# 128-bit integer, what an uncast sum() or // of BIGINTs yields) has no
+# Spark counterpart, so it maps to no family and always mismatches.
+_DUCK_FAMILY = {"BOOLEAN": "boolean", "TINYINT": "integral",
+                "SMALLINT": "integral", "INTEGER": "integral",
+                "BIGINT": "integral", "FLOAT": "fractional",
+                "DOUBLE": "fractional", "DECIMAL": "fractional",
+                "VARCHAR": "string", "DATE": "date",
+                "TIMESTAMP": "timestamp"}
+_SPARK_FAMILY = {"boolean": "boolean", "tinyint": "integral",
+                 "smallint": "integral", "int": "integral",
+                 "bigint": "integral", "float": "fractional",
+                 "double": "fractional", "decimal": "fractional",
+                 "string": "string", "date": "date",
+                 "timestamp": "timestamp"}
+
+
+def _type_mismatches(sdf, res):
+    """(column, DuckDB type, Spark type) for every oracle column whose
+    type family differs from the Spark column's."""
+    spark_types = {f.name.lower(): f.dataType.simpleString()
+                   for f in sdf.schema.fields}
+    out = []
+    for col, dt in zip(res.columns, res.types):
+        st = spark_types[col.lower()]
+        family = _DUCK_FAMILY.get(str(dt).split("(")[0])
+        if family is None or family != _SPARK_FAMILY.get(st.split("(")[0]):
+            out.append((col, str(dt), st))
+    return out
+
+
 def _normalize(rows, cols):
     out = []
     for r in rows:
@@ -81,6 +112,8 @@ def test_query_matches_oracle(spark, duck, name):
 
     assert sorted(c.lower() for c in scols) == \
         sorted(c.lower() for c in dcols), f"{name}: column mismatch"
+    bad_types = _type_mismatches(sdf, res)
+    assert not bad_types, f"{name}: oracle column types {bad_types}"
     assert len(srows) == len(drows), \
         f"{name}: row count {len(srows)} vs {len(drows)}"
     assert _normalize(srows, scols) == _normalize(drows, dcols), \

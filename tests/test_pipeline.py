@@ -164,3 +164,50 @@ def test_pipeline_triples_invariant_to_input_partitioning(spark,
         assert triples(spread) == want
     finally:
         spread.unpersist()
+
+
+def _outer_final_plan(df) -> str:
+    """The final AQE plan of the cached relation under ``df``: the text
+    between its first '== Final Plan ==' and the '== Initial Plan =='
+    at the same indentation (nested cached plans print their own pair
+    deeper in)."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    start = next(i for i, x in enumerate(lines) if "== Final Plan ==" in x)
+    col = lines[start].index("==")
+    end = next(i for i in range(start + 1, len(lines))
+               if lines[i].find("== Initial Plan ==") == col)
+    return "\n".join(lines[start:end])
+
+
+def test_abbreviation_retry_reuses_the_sieve_broadcasts(spark):
+    """The abbreviation retry runs in the main sieve's rows and plan: the
+    post-abbreviation mentions' executed plan holds no join keyed on
+    mention_id, each LUT broadcast is built once, and all seven retry
+    lookups (plus the lowercase pass) read it as a ReusedExchange."""
+    from bern2_spark import corpus
+    from bern2_spark.operators.normalize import build_lookup_tables
+    lex = corpus.make_lexicon(42)
+    lf = next(n for t, _c, n in lex if t == "disease" and " " in n)
+    sf = "".join(w[0] for w in lf.split()).upper()
+    lex = lex + [("disease", corpus.TAG_ONLY, sf)]
+    extra = spark.createDataFrame(
+        [("repo", f"docs/a{i}.txt", f"c{i}", "en",
+          f"Patients with {lf} ({sf}) were enrolled. {sf} progressed.")
+         for i in range(4)], "repo string, path string, commit string, "
+        "lang string, content string")
+    docs = corpus.documents_df(spark, 20, 42, lex).unionByName(extra)
+    with run_pipeline(docs, lex, spark, neural=False) as res:
+        retried = res.normalized.filter(F.col("mention") == sf)
+        assert retried.count() > 0
+        assert retried.filter(F.col("cui") == CUI_LESS).count() == 0
+        plan = _outer_final_plan(res.normalized)
+    assert not re.search(r"Join \[[^\]]*\bmention_id#", plan)
+    built = re.findall(r"[+:]- BroadcastExchange .*\[plan_id=(\d+)\]", plan)
+    reused = re.findall(
+        r"[+:]- ReusedExchange \[_et_\w+#.*\[plan_id=(\d+)\]", plan)
+    assert len(reused) == 8
+    lut_ids = set(reused)
+    assert len(lut_ids) == len(build_lookup_tables(
+        spark.createDataFrame([], "ent_type string, cui string, "
+                              "name string")))
+    assert sorted(i for i in built if i in lut_ids) == sorted(lut_ids)

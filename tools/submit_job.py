@@ -14,7 +14,7 @@ triples, dataprep/codekg.py) over the same
 Reads the documents table, runs the full KG pipeline (preprocess ->
 tag -> mutations -> sieve normalize -> neural fallback -> canonicalize),
 and writes triples + mention provenance through CheckpointedSink
-(partitioned parquet snapshots, per-partition lineage rows, manifest
+(partitioned parquet snapshots, per-file lineage rows, manifest
 commit LAST so a crash mid-write is invisible to resume).  Emits one
 JSON metrics line on stdout.
 
@@ -67,7 +67,7 @@ def main(argv=None) -> int:
     t0 = time.time()
     if args.resume and sink.is_committed("triples"):
         out = {"resumed": True,
-               "triples": sink.read_stage(spark, "triples").count(),
+               "triples": sink.committed_rows("triples"),
                "sec": round(time.time() - t0, 2)}
         print(json.dumps(out))
         return 0
@@ -88,8 +88,8 @@ def main(argv=None) -> int:
         res = run_pipeline(docs, corpus.DRIVER_VOCAB_LEXICON, spark)
         triples = res.triples
     sink.write_stage(triples, "triples", partition_by=["pred"])
-    n = sink.read_stage(spark, "triples").count()
-    print(json.dumps({"resumed": False, "triples": n,
+    print(json.dumps({"resumed": False,
+                      "triples": sink.committed_rows("triples"),
                       "sec": round(time.time() - t0, 2)}))
     return 0
 
