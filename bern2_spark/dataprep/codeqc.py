@@ -21,31 +21,12 @@ into the same whole-stage-codegen pass that reads the file bytes.
   content hash (co-partitioned equi-join, never the content itself).
   A pathological mono-repo (skewed ``repo`` key) is AQE skew-join
   territory — the join side carries only (hash, count) pairs.
-* ``comment_line_ratio``: per-line prefix test via higher-order array
-  functions; the line array never leaves the row (no explode).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-# Comment-line prefixes per language family (public convention; the
-# per-lang map mirrors what The Stack's filters hardcode).
-COMMENT_PREFIXES = {
-    "python": ["#"],
-    "ruby": ["#"],
-    "shell": ["#"],
-    "c": ["//", "/*", "*"],
-    "cpp": ["//", "/*", "*"],
-    "java": ["//", "/*", "*"],
-    "javascript": ["//", "/*", "*"],
-    "go": ["//"],
-    "rust": ["//"],
-    "sql": ["--"],
-    "lua": ["--"],
-    "text": ["#"],
-}
 
 _AUTOGEN_RE = r"(?i)auto-?generated|do not edit|generated by"
 _SPDX_RE = r"SPDX-License-Identifier:\s*([A-Za-z0-9.\-]+)"
@@ -175,35 +156,6 @@ def repo_stats(df: DataFrame,
                  F.sum("n_bytes").alias("total_bytes"),
                  F.sum(F.when(F.col("n_copies") > 1, 1)
                         .otherwise(0)).alias("dup_files")))
-
-
-def comment_line_ratio(df: DataFrame, content_col: str = "content",
-                       lang_col: str = "lang") -> DataFrame:
-    """Fraction of non-blank lines that are comments for the file's
-    language (unknown langs fall back to '#').  Higher-order array
-    ops only — the line array never explodes into rows."""
-    c = F.col(content_col)
-
-    def is_comment(line: Column) -> Column:
-        t = F.ltrim(line)
-        cond = t.startswith("#")  # unknown-lang fallback
-        # The prefix map is tiny and static: unroll it into one
-        # CASE tree keyed on the lang column (all codegen'd).
-        for lang, prefixes in COMMENT_PREFIXES.items():
-            hit = F.lit(False)
-            for p in prefixes:
-                hit = hit | t.startswith(p)
-            cond = F.when(F.col(lang_col) == lang, hit).otherwise(cond)
-        return cond
-
-    nonblank = F.filter(_lines(c), lambda x: F.trim(x) != "")
-    n_nonblank = F.size(nonblank)
-    n_comment = F.size(F.filter(nonblank, is_comment))
-    ratio = F.when(n_nonblank > 0,
-                   n_comment.cast("double") / n_nonblank).otherwise(0.0)
-    return (df
-            .withColumn("n_code_lines", n_nonblank - n_comment)
-            .withColumn("comment_ratio", F.round(ratio, 6)))
 
 
 # Branch-opening keywords across the battery's language families —

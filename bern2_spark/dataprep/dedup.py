@@ -33,8 +33,10 @@ def norm_tokens(col):
 
 
 def word_bigrams_from(toks):
-    """``word_bigrams`` over an ALREADY-MATERIALIZED token-array column
-    reference.  HOF lambda bodies re-evaluate every captured subtree
+    """Adjacent-token bigram strings over an ALREADY-MATERIALIZED
+    token-array column reference; <2-token inputs yield an empty
+    array (shared by textqc repetition features and DSIR importance
+    weighting).  HOF lambda bodies re-evaluate every captured subtree
     per element (Catalyst does no loop-invariant hoisting), so passing
     the raw ``norm_tokens`` expression here re-tokenized the text once
     per bigram position — O(tokens^2) per doc.  Callers materialize
@@ -44,14 +46,6 @@ def word_bigrams_from(toks):
         F.transform(F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
                     lambda i: F.array_join(F.slice(toks, i, 2), " ")),
         1, k)).otherwise(F.array().cast("array<string>"))
-
-
-def word_bigrams(col):
-    """adjacent-token bigram strings of ``norm_tokens``; <2-token
-    inputs yield an empty array (shared by textqc repetition features
-    and DSIR importance weighting).  Prefer the two-step
-    ``word_bigrams_from`` on hot paths (see its docstring)."""
-    return word_bigrams_from(norm_tokens(col))
 
 
 def shingles_from(toks, n: int = 3):

@@ -314,11 +314,10 @@ def pack_sequences(docs, token_col: str, budget: int,
 
     One window prefix sum over the canonical (id) order — the same
     single-sort shape as the exact token-budget sampler.  At 10^12
-    docs the global ordered window is the exact path; the scale path
-    is hierarchical: pack within hash buckets independently (each
-    bucket is one partition's window) and accept bucket-boundary
-    padding — the industry trade, since sequences never cross shard
-    files anyway.  Deterministic: no RNG, byte-stable on any engine."""
+    docs the global ordered window is one total sort; packing within
+    hash buckets instead (a per-bucket window) trades one partially
+    filled sequence per bucket for n_buckets-way parallel sorts.
+    Deterministic: no RNG, byte-stable on any engine."""
     w = Window.orderBy(id_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     cum = F.sum(token_col).over(w)
@@ -331,34 +330,6 @@ def pack_sequences(docs, token_col: str, budget: int,
             .withColumn("_start", start)
             .withColumn("seq_id",
                         F.expr(f"_start div {int(budget)}"))
-            .withColumn("seq_offset",
-                        F.pmod(F.col("_start"),
-                               F.lit(int(budget))).cast("long"))
-            .drop("_start"))
-
-
-def pack_sequences_bucketed(docs, token_col: str, budget: int,
-                            n_buckets: int = 64,
-                            id_col: str = "doc_id"):
-    """The 10^12-doc scale path of ``pack_sequences``: documents hash
-    into ``n_buckets`` independent packing domains and each bucket
-    packs with its own local prefix sum — the global ordered window
-    (one total sort) becomes a per-bucket window (one hash shuffle,
-    n_buckets-way parallel sorts), at the cost of at most one
-    partially-filled sequence per bucket (the industry trade:
-    sequences never cross shard files anyway).  Output adds
-    ``bucket``; (bucket, seq_id) is the sequence key.  Deterministic:
-    the bucket is a pure hash of the id, the in-bucket order is the
-    canonical id order."""
-    bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets))
-    d = (docs.select(id_col, F.col(token_col).cast("long")
-                     .alias(token_col))
-         .withColumn("bucket", bucket))
-    w = (Window.partitionBy("bucket").orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    start = (F.sum(token_col).over(w) - F.col(token_col)).cast("long")
-    return (d.withColumn("_start", start)
-            .withColumn("seq_id", F.expr(f"_start div {int(budget)}"))
             .withColumn("seq_offset",
                         F.pmod(F.col("_start"),
                                F.lit(int(budget))).cast("long"))

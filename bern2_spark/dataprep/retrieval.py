@@ -21,7 +21,7 @@ second corpus scan); N and avgdl are a scan-fused global aggregate
 broadcast back as one row; the final top-k is a
 TakeOrderedAndProject, never a full sort.  At 10^12 files a real
 deployment materializes the (term, doc, tf) table once (bucketed by
-term, sources/bucketed.py) and this plan's score/join stages run
+term, ``DataFrameWriter.bucketBy``) and this plan's score/join stages run
 unchanged against it.
 """
 

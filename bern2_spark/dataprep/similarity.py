@@ -843,24 +843,14 @@ def pq_encode_col(vec_col, codebooks: List[List[List[float]]],
                   dim: int):
     """Column expr: vector -> array of ``m`` code ids (argmin-L2 per
     subspace, smallest-index tiebreak — same ``_cell_scores`` argmin
-    the coarse quantizer uses). Pure plan-side expression, no UDF."""
+    the coarse quantizer uses). Pure plan-side expression, no UDF.
+    At m=8/k=256 the codes are 8 bytes where the raw float32[768]
+    vector is 3 KB — the reason PQ exists at 10^12 vectors."""
     m = len(codebooks)
     dsub = dim // m
     return F.array(*[
         F.array_min(_book_scores(vec_col, codebooks[s], s * dsub))["i"]
         for s in range(m)])
-
-
-def pq_encode(df: DataFrame, codebooks: List[List[List[float]]],
-              dim: int = 64, id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
-    """Corpus -> (id, codes array<int>): ``m`` small ints per vector —
-    at m=8/k=256 that is 8 bytes where the raw float32[768] vector is
-    3 KB, the 100-TB reason PQ exists (the encoded store of 10^12
-    vectors fits a cluster's disks; the raw one does not)."""
-    return df.select(F.col(id_col),
-                     pq_encode_col(F.col(vec_col), codebooks, dim)
-                     .alias("codes"))
 
 
 def ivf_pq_topk(corpus: DataFrame, queries: DataFrame,

@@ -402,31 +402,6 @@ def compression_ratio(docs: DataFrame,
     return docs.mapInPandas(score, schema=schema)
 
 
-def blocklist_filter(docs: DataFrame, blocklist,
-                     text_col: str = "text") -> DataFrame:
-    """Blocklist gate (the C4 'bad words' rule shape, Raffel et al.
-    2020 §2.2) — the LIST is caller-supplied policy, not shipped
-    here.  Adds ``blocklist_hits`` (token occurrences matching the
-    list, case-insensitive, word-boundary exact — 'class' never
-    matches a blocked 'ass') and ``blocked`` (hits > 0).
-
-    One compiled alternation regex over the scan — codegen'd, zero
-    shuffle; the list is a plan literal, so at 10^5+ entries switch
-    to the broadcast-join form of oov_rate instead (same output
-    columns, one token explode)."""
-    import re as _re
-
-    words = sorted({w.lower() for w in blocklist if w})
-    if not words:
-        return (docs.withColumn("blocklist_hits",
-                                F.lit(0).cast("bigint"))
-                .withColumn("blocked", F.lit(False)))
-    pat = r"(?i)\b(?:" + "|".join(_re.escape(w) for w in words) + r")\b"
-    hits = F.regexp_count(F.col(text_col), F.lit(pat)).cast("bigint")
-    return (docs.withColumn("blocklist_hits", hits)
-            .withColumn("blocked", hits > 0))
-
-
 def lm_cross_entropy(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", bucket_hex: int = 3,
                      smoothing: float = 1.0, round_to: int | None = 9

@@ -156,7 +156,7 @@ def funnel_counts(events: DataFrame, steps, user_col: str = "user_id",
     user-count-sized (<= |users| rows, shrinking per stage) — at any
     realistic user cardinality they broadcast, so the event table is
     scanned once per stage with no wide join; with events bucketed by
-    user (sources/bucketed.py) even the aggregations are
+    user (``DataFrameWriter.bucketBy``) even the aggregations are
     exchange-free.  The per-stage scans are the exact formulation; a
     single-scan variant (collect each user's per-type min-ts vector,
     fold the funnel in one agg) trades one shuffle of |users| x

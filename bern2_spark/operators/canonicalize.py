@@ -1,5 +1,5 @@
-"""Stage 6a — canonicalization. Operators W1 (overlap resolution),
-U1 (mutation union), W3 (output ordering) of SURVEY §2.5/§2.7.
+"""Stage 6a — canonicalization. Operators W1 (overlap resolution) and
+U1 (mutation union) of SURVEY §2.5/§2.7.
 
 W1 reproduces resolve_overlap step 1 (bern2/bern2.py:451-486): group
 all typed mentions sharing an exact (start, end) span, rank by
@@ -49,15 +49,6 @@ def resolve_overlap(normalized: DataFrame) -> DataFrame:
 def union_mutations(resolved: DataFrame, mutations_norm: DataFrame) -> DataFrame:
     """U1 — tmVar mentions join the canonical set unconditionally."""
     return resolved.unionByName(mutations_norm)
-
-
-def order_output(annotations: DataFrame) -> DataFrame:
-    """W3 — stable (begin, obj) sort inside each doc
-    (bern2/convert.py:329-335). sortWithinPartitions after hashing by
-    doc keeps this a local sort at scale (no global range shuffle)."""
-    return (annotations
-            .repartition("doc_id")
-            .sortWithinPartitions("doc_id", "begin", "obj"))
 
 
 def entity_catalog(mentions: DataFrame,

@@ -22,8 +22,7 @@ is one scan + one 1-row broadcast.  Writing would then be
 one shuffle, executor-local sorts.
 
 Reference scope note: BERN2 has no storage-layout story at all; this
-is engine-side infrastructure for the 100-TB posture (SURVEY §2.12),
-sibling to sources/bucketed.py.
+is engine-side infrastructure for the 100-TB posture (SURVEY §2.12).
 """
 
 from __future__ import annotations

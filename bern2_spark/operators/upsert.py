@@ -12,7 +12,7 @@ Spark-first shape: union the two sides with a precedence column and
 keep the highest-precedence row per key via one window — exactly the
 copy-on-write plan Iceberg/Delta MERGE INTO compiles to when the
 update set is not clustered.  One shuffle on the merge key; with both
-sides bucketed by the key (sources/bucketed.py) the exchange
+sides bucketed by the key (``DataFrameWriter.bucketBy``) the exchange
 disappears entirely.  Skewed keys are AQE territory — the window
 partitions by the full merge key, so only a pathological single-key
 firehose concentrates.
@@ -71,7 +71,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame,
 
     One full outer join co-partitioned on the merge key — the same
     single exchange as the upsert; with both snapshots bucketed by
-    the key (sources/bucketed.py) it is exchange-free."""
+    the key (``DataFrameWriter.bucketBy``) it is exchange-free."""
     value_cols = [c for c in new.columns if c not in keys]
     # presence flags come from JOIN-side tags, not value nullness: a
     # legitimately-NULL value column must not misreport presence

@@ -17,9 +17,8 @@ from typing import Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bern2_spark import corpus
 from bern2_spark.operators.canonicalize import (
-    order_output, resolve_overlap, union_mutations,
+    resolve_overlap, union_mutations,
 )
 from bern2_spark.operators.filters import filter_species_human
 from bern2_spark.operators.mutations import detect_mutations
@@ -38,8 +37,8 @@ class PipelineResult:
     annotations: DataFrame
     triples: DataFrame
     # O5 — error side-output (doc_id, error_code) for docs the reference
-    # would short-circuit; None when the pipeline ran without the stage
-    quarantine: Optional[DataFrame] = None
+    # would short-circuit
+    quarantine: DataFrame
     # DataFrames persisted during plan construction; callers that run
     # the pipeline repeatedly (streaming foreachBatch, benches) must
     # release() after the consuming actions or cached RDDs accumulate.
@@ -72,9 +71,7 @@ def pipeline_input(documents: DataFrame) -> DataFrame:
 def run_pipeline(documents: DataFrame,
                  lexicon_rows: Sequence[Tuple[str, str, str]],
                  spark: Optional[SparkSession] = None,
-                 neural: bool = True,
-                 abbreviations: bool = True,
-                 ordered: bool = False) -> PipelineResult:
+                 neural: bool = True) -> PipelineResult:
     """documents: (repo, path, commit, lang, content)."""
     spark = spark or documents.sparkSession
     # TAG_ONLY rows feed the tagger gazetteer but not the normalization
@@ -127,18 +124,15 @@ def run_pipeline(documents: DataFrame,
     from bern2_spark.operators.normalize import build_lookup_tables
     lut = build_lookup_tables(lexicon_df)
     ner_norm = normalize_mentions(ner, lexicon_df, lut=lut)
-    if abbreviations:
-        # M4/J3 abbreviation level: Schwartz–Hearst short->long forms,
-        # CUI-less short-form mentions retry the sieve with long forms
-        from bern2_spark.operators.abbrev import (
-            abbreviation_table, apply_abbreviation_level,
-        )
-        ner_norm = apply_abbreviation_level(
-            ner_norm, lexicon_df, abbreviation_table(pre),
-            track_persisted=persisted, lut=lut)
-    if abbreviations or neural:
-        ner_norm = ner_norm.persist()
-        persisted.append(ner_norm)
+    # M4/J3 abbreviation level: Schwartz–Hearst short->long forms,
+    # CUI-less short-form mentions retry the sieve with long forms
+    from bern2_spark.operators.abbrev import (
+        abbreviation_table, apply_abbreviation_level,
+    )
+    ner_norm = apply_abbreviation_level(
+        ner_norm, lexicon_df, abbreviation_table(pre),
+        track_persisted=persisted, lut=lut).persist()
+    persisted.append(ner_norm)
     if neural:
         # the neural index must see only the NORMALIZATION lexicon
         # (norm_rows): tag-only gazetteer rows carry a sentinel cui
@@ -155,10 +149,8 @@ def run_pipeline(documents: DataFrame,
     # Stage 6 — W1 on typed mentions, then U1 mutation union.
     canonical = union_mutations(resolve_overlap(ner_norm), mut_norm)
 
-    annotations = to_annotations(canonical)
-    if ordered:
-        annotations = order_output(annotations)
-    annotations = annotations.persist(StorageLevel.MEMORY_AND_DISK)
+    annotations = to_annotations(canonical).persist(
+        StorageLevel.MEMORY_AND_DISK)
     persisted.append(annotations)
     triples = to_triples(annotations)
 
@@ -184,9 +176,3 @@ def _fan_out_narrow_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
         n_files = 0
     return df.repartition(target) if n_files < target else df
 
-
-def run_synthetic(spark: SparkSession, n_docs: int = 200, seed: int = 42,
-                  **kw) -> PipelineResult:
-    lex = corpus.make_lexicon(seed)
-    docs = corpus.documents_df(spark, n_docs, seed, lex)
-    return run_pipeline(docs, lex, spark, **kw)

@@ -4185,9 +4185,9 @@ SELECT event_type,
 FROM events GROUP BY 1, 2
 """)
 def events_windowed_counts(spark, sf_dir):
-    """Tumbling 1-hour windowed aggregation (F.window — the batch twin
-    of the Structured Streaming windowed path in streaming/windowed.py);
-    value summed as exact integer micros so the hash is stable against
+    """Tumbling 1-hour windowed aggregation (F.window, the same
+    grouping a Structured Streaming watermarked window uses); value
+    summed as exact integer micros so the hash is stable against
     float summation order."""
     ev = _events(spark, sf_dir)
     win = F.window("ts", "1 hour")

@@ -59,8 +59,7 @@ def get_spark(app_name: str = "bern2_spark", master: str | None = None,
     """Build (or reuse) a SparkSession.
 
     ``master`` defaults to ``local[default_cpus()]`` so the same entry
-    point serves tests, bench, and the two-parallelism scaling run
-    required by BENCH/BASELINE.md.
+    point serves tests, bench.py and perfbench.
     """
     if master is None:
         master = f"local[{default_cpus()}]"

@@ -14,7 +14,7 @@ Per micro-batch:
 * write under ``cells/batch=<id>/cell=<c>/`` in overwrite mode, so a
   replayed micro-batch (crash/retry) rewrites the same files instead
   of double-appending — the same idempotency contract as
-  streaming/dedup.py and streaming/incremental.py.
+  streaming/kg.py and streaming/sketch.py.
 
 Queries read the accumulated store with cell-partition pruning: a
 probe of n_probe cells scans n_probe/n_centroids of every batch's

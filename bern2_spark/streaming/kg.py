@@ -13,7 +13,7 @@ triples(A) ∪ triples(B), which the test asserts against a batch run
 over the unioned corpus (tests/test_streaming.py).
 
 Idempotency follows the module convention (streaming/ann.py,
-streaming/dedup.py): each micro-batch OVERWRITES its own
+streaming/sketch.py): each micro-batch OVERWRITES its own
 ``triples/batch=<id>`` partition directory, so a crash/retry replay
 rewrites identical files instead of double-appending.
 ``PipelineResult.release()`` runs after each batch's write — without
@@ -37,9 +37,7 @@ from bern2_spark.pipeline import run_pipeline
 
 def stream_kg_triples(spark: SparkSession, input_dir: str,
                       out_dir: str, schema,
-                      lexicon_rows: Sequence[Tuple[str, str, str]],
-                      neural: bool = True,
-                      abbreviations: bool = True) -> None:
+                      lexicon_rows: Sequence[Tuple[str, str, str]]) -> None:
     """Drain ``input_dir`` (json files of (repo, path, commit, lang,
     content) rows) through the full KG pipeline; triples land under
     ``triples/batch=<id>`` (overwrite = replay-idempotent), the O5
@@ -51,16 +49,12 @@ def stream_kg_triples(spark: SparkSession, input_dir: str,
         if batch_df.isEmpty():
             return
         result = run_pipeline(batch_df, lexicon_rows,
-                              spark=batch_df.sparkSession,
-                              neural=neural,
-                              abbreviations=abbreviations)
+                              spark=batch_df.sparkSession)
         try:
             (result.triples.write.mode("overwrite").format("parquet")
              .save(os.path.join(triples_dir, f"batch={batch_id}")))
-            if result.quarantine is not None:
-                (result.quarantine.write.mode("overwrite")
-                 .format("parquet")
-                 .save(os.path.join(quar_dir, f"batch={batch_id}")))
+            (result.quarantine.write.mode("overwrite").format("parquet")
+             .save(os.path.join(quar_dir, f"batch={batch_id}")))
         finally:
             result.release()
 
@@ -92,7 +86,7 @@ def stream_code_kg(spark: SparkSession, input_dir: str, out_dir: str,
     Unlike the bio pipeline above — per-document independent, so
     streamed triples union directly — code triples AGGREGATE across a
     repo's files, which can straddle micro-batches.  The store is
-    therefore merge-on-read (the streaming/incremental.py convention):
+    therefore merge-on-read (the streaming/sketch.py convention):
     each batch persists its partial ``n_mentions``/``n_files`` counts
     and ``read_code_triples`` sums them.  merged == batch-recompute
     holds because every file arrives exactly once: ``n_mentions`` is a

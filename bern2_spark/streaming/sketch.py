@@ -4,7 +4,8 @@ Maintains "distinct values per group so far" over an unbounded ingest
 WITHOUT unbounded state: each micro-batch writes only its own
 ``groups x k`` bottom-k minima to a ``batch=<id>`` partition
 directory, and the reader merges all batch sketches into the global
-bottom-k at query time (merge-on-read, like streaming/incremental.py).
+bottom-k at query time (merge-on-read, like streaming/kg.py's code
+triples).
 
 Why this shape is exactly right for a sketch:
 

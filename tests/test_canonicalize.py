@@ -98,9 +98,11 @@ def test_pubannotation_document_shape(spark):
     import json
 
     from bern2_spark.operators.postprocess import to_pubannotation
-    from bern2_spark.pipeline import run_synthetic
+    from bern2_spark import corpus
+    from bern2_spark.pipeline import run_pipeline
 
-    res = run_synthetic(spark, n_docs=30)
+    lex = corpus.make_lexicon(42)
+    res = run_pipeline(corpus.documents_df(spark, 30, 42, lex), lex, spark)
     pa = to_pubannotation(res.annotations, res.docs,
                           timestamp="Thu Jan 01 00:00:00 +0000 1970")
     rows = pa.collect()

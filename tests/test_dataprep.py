@@ -769,8 +769,8 @@ def test_ivf_pq_adc(spark):
     the same codes, so its ADC distance is the minimum possible and it
     ranks first among its cell's candidates."""
     from bern2_spark.dataprep.similarity import (
-        brute_force_topk, ivf_pq_topk, kmeans_train_local, pq_encode,
-        pq_train,
+        brute_force_topk, ivf_pq_topk, kmeans_train_local,
+        pq_encode_col, pq_train,
     )
     sf = "/root/testdata/sf0.001"
     emb = (spark.read.parquet(f"{sf}/embeddings.parquet")
@@ -783,7 +783,8 @@ def test_ivf_pq_adc(spark):
     assert len(b1) == 8 and all(len(bk) == 16 and len(bk[0]) == 8
                                 for bk in b1)
 
-    codes = pq_encode(emb, b1).collect()
+    codes = emb.select(pq_encode_col(F.col("embedding"), b1, 64)
+                       .alias("codes")).collect()
     assert all(len(r["codes"]) == 8
                and all(0 <= c < 16 for c in r["codes"]) for r in codes)
 
@@ -1051,23 +1052,6 @@ def test_repo_stats_dup_files(spark, code_files):
     assert out["r1"].dup_files == 0
 
 
-def test_comment_line_ratio(spark):
-    from bern2_spark.dataprep.codeqc import comment_line_ratio
-    rows = [
-        ("python", "# a\n# b\nx = 1\n\n"),       # 2 of 3 non-blank
-        ("go", "// only comments\n"),
-        ("rust", "fn main() {}\n"),
-        ("mystery", "# hash fallback\ncode\n"),
-    ]
-    df = spark.createDataFrame(rows, ["lang", "content"])
-    out = {r.lang: r for r in comment_line_ratio(df).collect()}
-    assert abs(out["python"].comment_ratio - 2 / 3) < 1e-6
-    assert out["python"].n_code_lines == 1
-    assert out["go"].comment_ratio == 1.0
-    assert out["rust"].comment_ratio == 0.0
-    assert abs(out["mystery"].comment_ratio - 0.5) < 1e-6
-
-
 def test_c4_rules_web_text(spark):
     from bern2_spark.dataprep.textqc import c4_rules
     good = ("This is a perfectly normal sentence of prose.\n"
@@ -1260,18 +1244,16 @@ def test_curate_code_corpus_composed(spark, code_files):
 
 def test_codeqc_filters_plan_scan_fused(spark, code_files):
     """Guard the scan-fusion contract: the Stack gates, license
-    spotter, comment ratio, and C4 rules must add ZERO Exchanges —
+    spotter and C4 rules must add ZERO Exchanges —
     they are the operators that must run at scan speed at 10^12
     files."""
     import re
 
-    from bern2_spark.dataprep.codeqc import (comment_line_ratio,
-                                             spot_license,
+    from bern2_spark.dataprep.codeqc import (spot_license,
                                              stack_quality_features)
     from bern2_spark.dataprep.textqc import c4_rules
     for df in (stack_quality_features(code_files),
                spot_license(code_files),
-               comment_line_ratio(code_files),
                c4_rules(code_files, text_col="content")):
         plan = df._jdf.queryExecution().executedPlan().toString()
         n_ex = len(re.findall(r"\bExchange\b", plan))
@@ -1370,56 +1352,6 @@ def test_session3_ops_partition_invariant(spark):
         docs.repartition(9), new.repartition(2),
         keys=["doc_id"]).collect()))
     assert d1 == d2 and d1
-
-
-def test_pack_sequences_bucketed_scale_path(spark):
-    """The bucket-local packing variant: within every bucket the
-    layout law holds (offsets advance by token counts, sequences cut
-    at the budget), buckets are independent, and the result is
-    partition-invariant."""
-    from bern2_spark.dataprep.mixing import pack_sequences_bucketed
-    docs = spark.createDataFrame(
-        [(i, 100 + (i * 53) % 700) for i in range(400)],
-        ["doc_id", "tok"])
-    out = pack_sequences_bucketed(docs, "tok", budget=2048,
-                                  n_buckets=8)
-    rows = sorted(map(tuple, out.collect()))
-    again = sorted(map(tuple, pack_sequences_bucketed(
-        docs.repartition(7), "tok", budget=2048,
-        n_buckets=8).collect()))
-    assert rows == again and len(rows) == 400
-    # verify the per-bucket layout law against a python fold
-    from collections import defaultdict
-    per = defaultdict(list)
-    for doc_id, tok, bucket, seq_id, seq_offset in rows:
-        per[bucket].append((doc_id, tok, seq_id, seq_offset))
-    assert len(per) > 1
-    for bucket, docs_b in per.items():
-        start = 0
-        for doc_id, tok, seq_id, seq_offset in sorted(docs_b):
-            assert seq_id == start // 2048
-            assert seq_offset == start % 2048
-            start += tok
-
-
-def test_blocklist_filter_word_boundaries(spark):
-    from bern2_spark.dataprep.textqc import blocklist_filter
-    docs = spark.createDataFrame(
-        [(1, "a classy sentence about classification"),
-         (2, "contains blockedword right here"),
-         (3, "BLOCKEDWORD shouts in caps, blockedword twice"),
-         (4, "")],
-        ["doc_id", "text"])
-    out = {r.doc_id: r for r in
-           blocklist_filter(docs, ["blockedword", "class"]).collect()}
-    # word-boundary exact: 'classy'/'classification' never match 'class'
-    assert not out[1].blocked and out[1].blocklist_hits == 0
-    assert out[2].blocked and out[2].blocklist_hits == 1
-    assert out[3].blocklist_hits == 2      # case-insensitive, counted
-    assert not out[4].blocked
-    # empty policy list: everything passes, schema stable
-    clean = blocklist_filter(docs, [])
-    assert clean.filter("blocked").count() == 0
 
 
 def test_winnow_guarantee_and_moss_composition(spark):

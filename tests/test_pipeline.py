@@ -5,14 +5,21 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from bern2_spark import corpus
 from bern2_spark.pipeline import (_fan_out_narrow_scan, pipeline_input,
-                                  run_pipeline, run_synthetic)
+                                  run_pipeline)
 from bern2_spark.schemas import CUI_LESS
+
+
+def _synthetic(spark, n_docs):
+    lex = corpus.make_lexicon(42)
+    return run_pipeline(corpus.documents_df(spark, n_docs, 42, lex), lex,
+                        spark)
 
 
 @pytest.fixture(scope="module")
 def result(spark):
-    r = run_synthetic(spark, n_docs=60)
+    r = _synthetic(spark, 60)
     r.annotations.cache().count()
     return r
 
@@ -60,7 +67,7 @@ def test_neural_fallback_links_suffixy_surfaces(result):
 
 
 def test_determinism(spark, result):
-    r2 = run_synthetic(spark, n_docs=60)
+    r2 = _synthetic(spark, 60)
     a = sorted(map(tuple, result.annotations.drop("prob").collect()))
     b = sorted(map(tuple, r2.annotations.drop("prob").collect()))
     assert a == b
@@ -81,7 +88,6 @@ def test_tag_only_sentinel_never_escapes(spark):
     emitted as real object ids — the neural index is built from the
     NORMALIZATION lexicon only, so a tag-only surface can't match
     itself at cosine 1.0 and smuggle the sentinel into the triples."""
-    from bern2_spark import corpus
     from bern2_spark.queries import _docs
 
     docs = (_docs(spark, "/root/testdata/sf0.001")
@@ -99,7 +105,7 @@ def test_tag_only_sentinel_never_escapes(spark):
 
 def test_release_unpersists(spark):
     before = len([r for r in spark.sparkContext._jsc.getPersistentRDDs()])
-    res = run_synthetic(spark, n_docs=30)
+    res = _synthetic(spark, 30)
     res.triples.count()
     assert len(res._persisted) > 0
     res.release()
@@ -110,7 +116,6 @@ def test_release_unpersists(spark):
 @pytest.fixture(scope="module")
 def one_file_docs(spark, tmp_path_factory):
     """The synthetic corpus as a single-file parquet, plus its lexicon."""
-    from bern2_spark import corpus
     lex = corpus.make_lexicon(42)
     path = str(tmp_path_factory.mktemp("one_file") / "docs.parquet")
     corpus.documents_df(spark, 60, 42, lex).coalesce(1).write.parquet(path)
@@ -184,7 +189,6 @@ def test_abbreviation_retry_reuses_the_sieve_broadcasts(spark):
     post-abbreviation mentions' executed plan holds no join keyed on
     mention_id, each LUT broadcast is built once, and all seven retry
     lookups (plus the lowercase pass) read it as a ReusedExchange."""
-    from bern2_spark import corpus
     from bern2_spark.operators.normalize import build_lookup_tables
     lex = corpus.make_lexicon(42)
     lf = next(n for t, _c, n in lex if t == "disease" and " " in n)

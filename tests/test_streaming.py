@@ -1,250 +1,8 @@
-"""Structured-Streaming incremental variant: backlog -> foreachBatch ->
-appended triples, then a second batch arrives and only it is processed."""
+"""Structured-Streaming drains (streaming/kg.py, ann.py, sketch.py):
+each micro-batch writes its own partition, and the merged store must
+equal a batch run over the unioned input."""
 
 import os
-
-import pytest
-
-from bern2_spark import corpus, schemas
-from bern2_spark.streaming.incremental import stream_documents
-
-
-def _write_batch(spark, path, n_docs, seed):
-    docs = corpus.documents_df(spark, n_docs=n_docs, seed=seed)
-    docs.write.mode("append").parquet(path)
-
-
-def test_streaming_incremental(spark, tmp_path):
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    lex = corpus.make_lexicon(seed=42)
-
-    _write_batch(spark, inp, 20, seed=42)
-    stream_documents(spark, inp, lex, out, ckpt)
-    t1 = spark.read.parquet(f"{out}/triples_stream")
-    n1 = t1.count()
-    assert n1 > 0
-    assert t1.columns == ["subj", "pred", "obj", "batch_id"]
-
-    # new files arrive; availableNow picks up ONLY the new backlog
-    _write_batch(spark, inp, 10, seed=7)
-    stream_documents(spark, inp, lex, out, ckpt)
-    t2 = spark.read.parquet(f"{out}/triples_stream")
-    assert t2.count() > n1
-    # first batch not reprocessed: its triples appear exactly once
-    dup = (t2.groupBy("subj", "pred", "obj").count()
-           .filter("count > 2").count())
-    assert dup == 0
-
-
-def test_streaming_cooccurrence_matches_batch_recompute(spark, tmp_path):
-    """Edge deltas + merge-on-read must equal the batch co-occurrence
-    recompute over the full triple set — INCLUDING when one document's
-    triples are split across micro-batches (the file source is free to
-    do that; doc-idempotent deltas make it correct): d3 arrives in two
-    batches, and the cross-batch pairs (A,C)/(B,C) still count."""
-    from bern2_spark.operators.cooccur import cooccurrence_edges
-    from bern2_spark.streaming.incremental import (
-        read_cooccurrence_edges, stream_cooccurrence,
-    )
-    tin = str(tmp_path / "triples_in")
-    out = str(tmp_path / "co_out")
-    ckpt = str(tmp_path / "co_ckpt")
-    b1 = [("d1", "has_disease", "A"), ("d1", "has_drug", "B"),
-          ("d2", "has_disease", "A"), ("d2", "has_drug", "B")]
-    b2 = [("d3", "has_disease", "A"), ("d3", "has_drug", "B")]
-    # d3 continues in a LATER batch: its (A,C) and (B,C) pairs exist
-    # only across the batch boundary
-    b3 = [("d3", "has_gene", "C"), ("d3", "has_drug", "B"),  # B repeats
-          ("d4", "has_gene", "C")]
-    sch = "subj string, pred string, obj string"
-    for b in (b1, b2, b3):
-        spark.createDataFrame(b, sch).write.mode("append").parquet(tin)
-        stream_cooccurrence(spark, tin, out, ckpt)
-
-    merged = {(r.cui_a, r.cui_b, r.n_docs)
-              for r in read_cooccurrence_edges(spark, out).collect()}
-    full = {(r.cui_a, r.cui_b, r.n_docs)
-            for r in cooccurrence_edges(
-                spark.createDataFrame(b1 + b2 + b3, sch)).collect()}
-    assert merged == full and ("A", "B", 3) in merged
-    assert ("A", "C", 1) in merged and ("B", "C", 1) in merged
-
-
-def test_stateful_running_totals(spark, tmp_path):
-    """applyInPandasWithState: per-type totals ACCUMULATE across
-    micro-batches (state survives; each batch emits refreshed rows)."""
-    from bern2_spark import corpus, schemas
-    from bern2_spark.streaming.stateful import stream_entity_totals
-
-    lex = corpus.make_lexicon(seed=5, per_type=30)
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drop(n0, n1, part):
-        rows = corpus.make_documents(n1, seed=5, lexicon=lex)[n0:]
-        (spark.createDataFrame(rows, schemas.DOCUMENTS)
-         .write.mode("append").parquet(f"{in_dir}/part={part}"))
-
-    drop(0, 25, 0)
-    stream_entity_totals(spark, in_dir, lex, out_dir, ckpt)
-    first = {r.ent_type: r.total_mentions
-             for r in spark.read.parquet(out_dir).collect()}
-    assert first and all(v > 0 for v in first.values())
-
-    drop(25, 50, 1)  # second backlog -> second run resumes from state
-    stream_entity_totals(spark, in_dir, lex, out_dir, ckpt)
-    rows = spark.read.parquet(out_dir).collect()
-    latest = {}
-    for r in rows:
-        if r.ent_type not in latest or r.batch_id > latest[r.ent_type][1]:
-            latest[r.ent_type] = (r.total_mentions, r.batch_id, r.total_batches)
-    # totals grew (state carried over) and batch counters advanced
-    assert all(latest[t][0] >= first[t] for t in first)
-    assert any(latest[t][0] > first[t] for t in first)
-    assert all(latest[t][2] >= 2 for t in latest if t in first)
-
-
-def test_windowed_counts_with_watermark_and_late_data(spark, tmp_path):
-    """Watermarked tumbling windows: append mode emits only finalized
-    windows; a late row arriving within the allowed lateness still
-    counts in its event-time window."""
-    from datetime import datetime, timedelta
-
-    from bern2_spark.streaming.windowed import stream_windowed_counts
-
-    base = datetime(2026, 1, 1, 0, 0, 0)
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-    def rows(hours, offset=0):
-        out = []
-        for h in hours:
-            for i in range(10):
-                out.append((offset + h * 100 + i,
-                            base + timedelta(hours=h, minutes=i * 5 + 1),
-                            i, "a", 1.0, "{}"))
-        return out
-
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    spark.createDataFrame(rows(range(0, 6)), schema) \
-        .write.mode("append").parquet(f"{in_dir}/b=0")
-    stream_windowed_counts(spark, in_dir, out_dir, ckpt,
-                           window_duration="1 hour", watermark="2 hours")
-    got1 = {r.window.start.hour: r.n_events
-            for r in spark.read.parquet(out_dir).collect()}
-    # run1 max ts ~5:46 -> watermark ~3:46 -> windows [0,1)..[2,3) final
-    assert got1 and all(v == 10 for v in got1.values())
-    assert max(got1) <= 3
-
-    # batch 2: hours 6..8 plus ONE late row for hour 4 (within lateness)
-    late = [(9999, base + timedelta(hours=4, minutes=50), 1, "a", 1.0,
-             "{}")]
-    spark.createDataFrame(rows(range(6, 9), offset=10000) + late, schema) \
-        .write.mode("append").parquet(f"{in_dir}/b=1")
-    stream_windowed_counts(spark, in_dir, out_dir, ckpt,
-                           window_duration="1 hour", watermark="2 hours")
-    got2 = {r.window.start.hour: r.n_events
-            for r in spark.read.parquet(out_dir).collect()}
-    assert got2[4] == 11  # the late row folded into its window
-    assert got2[5] == 10
-
-
-def test_stream_dedup_exact_global_and_idempotent(spark, tmp_path):
-    """History-global streaming dedup: duplicates across micro-batches
-    are dropped, survivors match batch-global dedup, and replaying a
-    micro-batch (crash/retry) does not double-append."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    from bern2_spark.streaming.dedup import (read_deduped,
-                                             stream_dedup_exact)
-
-    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
-    os.makedirs(inp)
-    schema = StructType([StructField("doc_id", LongType()),
-                         StructField("text", StringType())])
-    # three files -> three micro-batches (maxFilesPerTrigger=1); texts
-    # t0/t1 recur across batches, t5 recurs inside one batch
-    batches = [
-        [(0, "t0"), (1, "t1"), (2, "t2")],
-        [(3, "t0"), (4, "t3"), (5, "t5"), (6, "t5")],
-        [(7, "t1"), (8, "t3"), (9, "t4")],
-    ]
-    for i, rows in enumerate(batches):
-        p = os.path.join(inp, f"b{i}.json")
-        with open(p, "w") as f:
-            for doc_id, text in rows:
-                f.write(_json.dumps({"doc_id": doc_id, "text": text})
-                        + "\n")
-        # FileStreamSource orders by modification time (ties
-        # unordered) — distinct mtimes pin batch order
-        os.utime(p, (1000000 + i, 1000000 + i))
-    stream_dedup_exact(spark, inp, out, schema)
-    surv = read_deduped(spark, out)
-    texts = sorted(r.text for r in surv.collect())
-    assert texts == ["t0", "t1", "t2", "t3", "t4", "t5"]
-    # with pinned mtimes batch 0 == b0.json, so it holds the
-    # first-seen copies
-    assert {r.doc_id for r in surv.filter("batch = 0").collect()} \
-        == {0, 1, 2}
-
-    # replay batch 1 by hand (simulated retry after a crash): overwrite
-    # semantics + seen-table exclusion must yield the identical state
-    before = sorted((r.doc_id, r.text) for r in surv.collect())
-    from bern2_spark.streaming.dedup import _seen_before
-    b1 = spark.createDataFrame(batches[1], schema)
-    # re-run the foreachBatch body with the same batch_id
-    docs_dir = os.path.join(out, "docs")
-    seen_dir = os.path.join(out, "seen")
-    batch = (b1.withColumn("text_hash", F.md5(F.col("text")))
-             .dropDuplicates(["text_hash"]))
-    prev = _seen_before(spark, seen_dir, 1)
-    batch = batch.join(prev.select("text_hash"), "text_hash",
-                       "left_anti").localCheckpoint(eager=True)
-    batch.write.mode("overwrite").save(os.path.join(docs_dir, "batch=1"))
-    batch.select("text_hash").write.mode("overwrite").save(
-        os.path.join(seen_dir, "batch=1"))
-    after = sorted((r.doc_id, r.text)
-                   for r in read_deduped(spark, out).collect())
-    assert after == before
-
-
-def test_dedup_within_watermark_bounded_state(spark, tmp_path):
-    """The watermark variant drops in-horizon duplicates and its plan
-    carries the state-eviction watermark (bounded state — streaming
-    dropDuplicates without one grows forever)."""
-    import json as _json
-
-    from bern2_spark.streaming.dedup import dedup_within_watermark
-    from pyspark.sql.types import (StringType, StructField, StructType,
-                                   TimestampType)
-
-    inp = str(tmp_path / "win")
-    out_dir = str(tmp_path / "wout")
-    ckpt = str(tmp_path / "wckpt")
-    os.makedirs(inp)
-    rows = [("2026-01-01T10:00:00", "a"), ("2026-01-01T10:01:00", "a"),
-            ("2026-01-01T10:02:00", "b")]
-    with open(os.path.join(inp, "b0.json"), "w") as f:
-        for ts, text in rows:
-            f.write(_json.dumps({"ts": ts, "text": text}) + "\n")
-    schema = StructType([StructField("ts", TimestampType()),
-                         StructField("text", StringType())])
-    stream = spark.readStream.schema(schema).json(inp)
-    deduped = dedup_within_watermark(stream, delay="10 minutes")
-    q = (deduped.writeStream.format("parquet")
-         .option("path", out_dir).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = sorted(r.text for r in spark.read.parquet(out_dir).collect())
-    assert got == ["a", "b"]
 
 
 def test_stream_ivf_index_matches_batch_assignment(spark, tmp_path):
@@ -353,93 +111,6 @@ def test_stream_kmv_sketch_merges_to_batch_answer(spark, tmp_path):
     assert again == got
 
 
-def test_stream_dedup_bloom_no_false_negatives(spark, tmp_path):
-    """Bloom-gated streaming dedup: constant-size state, previously
-    seen docs are NEVER re-emitted (one-sided guarantee), new docs
-    pass (FPR negligible at this fill factor), replay is idempotent."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    from bern2_spark.streaming.bloom import (read_survivors,
-                                             stream_dedup_bloom)
-
-    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
-    os.makedirs(inp)
-    schema = StructType([StructField("doc_id", LongType()),
-                         StructField("text", StringType())])
-    batches = [
-        [(i, f"t{i}") for i in range(40)],
-        # 20 repeats of batch 0 + 20 new
-        [(100 + i, f"t{i}") for i in range(20)]
-        + [(200 + i, f"n{i}") for i in range(20)],
-        # everything repeats -> zero survivors
-        [(300 + i, f"t{i}") for i in range(10)]
-        + [(400 + i, f"n{i}") for i in range(10)],
-    ]
-    for i, rows in enumerate(batches):
-        p = os.path.join(inp, f"b{i}.json")
-        with open(p, "w") as f:
-            for doc_id, text in rows:
-                f.write(_json.dumps({"doc_id": doc_id, "text": text})
-                        + "\n")
-        os.utime(p, (1000000 + i, 1000000 + i))
-    m_bits, k = 1 << 16, 5
-    stream_dedup_bloom(spark, inp, out, schema, m_bits=m_bits, k=k)
-    surv = read_survivors(spark, out)
-    # no false negatives: no text survives twice across batches
-    per_text = (surv.groupBy("text").count()
-                .filter("count > 1").collect())
-    assert per_text == []
-    # batch 0 passes whole; batch 2 is all-repeat -> empty
-    assert surv.filter("batch = 0").count() == 40
-    assert surv.filter("batch = 2").count() == 0
-    # at 80 insertions into 2^16 bits the FP probability is ~1e-11 per
-    # doc, so every genuinely new batch-1 doc must survive
-    b1 = sorted(r.text for r in surv.filter("batch = 1").collect())
-    assert b1 == sorted(f"n{i}" for i in range(20))
-    # state is constant-size: every snapshot holds <= m/64 words
-    for b in (0, 1, 2):
-        words = spark.read.parquet(
-            os.path.join(out, "state", f"batch={b}"))
-        assert words.count() <= m_bits // 64
-    # monotone fill: state only gains bits across batches
-    w0 = {r.word_idx: r.word for r in spark.read.parquet(
-        os.path.join(out, "state", "batch=0")).collect()}
-    w2 = {r.word_idx: r.word for r in spark.read.parquet(
-        os.path.join(out, "state", "batch=2")).collect()}
-    for idx, word in w0.items():
-        assert (w2.get(idx, 0) | word) == w2.get(idx, 0)
-
-    # replay batch 1 by hand: prior-state read excludes batch 1's own
-    # snapshot, so survivors and the rewritten snapshot are identical
-    from bern2_spark.streaming.bloom import (_latest_state,
-                                             batch_bitmap,
-                                             merge_bitmaps,
-                                             probably_seen)
-    before = sorted((r.doc_id, r.text)
-                    for r in surv.filter("batch = 1").collect())
-    b1df = spark.createDataFrame(batches[1], schema)
-    batch = (b1df.withColumn("text_hash", F.md5(F.col("text")))
-             .dropDuplicates(["text_hash"]))
-    prev = _latest_state(spark, os.path.join(out, "state"), 1)
-    flagged = probably_seen(batch, prev, "text_hash", k, m_bits)
-    redo = flagged.filter(~F.coalesce("seen", F.lit(False))) \
-        .drop("seen").localCheckpoint(eager=True)
-    redo.write.mode("overwrite").format("parquet").save(
-        os.path.join(out, "docs", "batch=1"))
-    merged = merge_bitmaps(prev, batch_bitmap(batch, "text_hash", k,
-                                              m_bits))
-    merged.write.mode("overwrite").format("parquet").save(
-        os.path.join(out, "state", "batch=1"))
-    after = sorted((r.doc_id, r.text) for r in
-                   read_survivors(spark, out)
-                   .filter("batch = 1").collect())
-    assert after == before
-
-
 def test_stream_kg_triples_matches_batch_and_replays(spark, tmp_path):
     """The full KG pipeline over a document stream: the union of all
     micro-batch triples must equal a single batch run over the unioned
@@ -467,14 +138,12 @@ def test_stream_kg_triples_matches_batch_and_replays(spark, tmp_path):
             for row in docs[i * 10:(i + 1) * 10]:
                 f.write(_json.dumps(dict(zip(cols, row))) + "\n")
         os.utime(p, (1000000 + i, 1000000 + i))
-    stream_kg_triples(spark, inp, out, schema, lex,
-                      neural=False, abbreviations=False)
+    stream_kg_triples(spark, inp, out, schema, lex)
     streamed = read_stream_triples(spark, out)
     got = sorted(tuple(r) for r in streamed.drop("batch").collect())
 
     with run_pipeline(spark.createDataFrame(docs, schema), lex,
-                      spark=spark, neural=False,
-                      abbreviations=False) as result:
+                      spark=spark) as result:
         want = sorted(tuple(r) for r in result.triples.collect())
     assert got == want and len(want) > 0
 
@@ -482,8 +151,7 @@ def test_stream_kg_triples_matches_batch_and_replays(spark, tmp_path):
     before = sorted(tuple(r) for r in
                     streamed.filter("batch = 1").drop("batch").collect())
     b1 = spark.createDataFrame(docs[10:20], schema)
-    with run_pipeline(b1, lex, spark=spark, neural=False,
-                      abbreviations=False) as redo:
+    with run_pipeline(b1, lex, spark=spark) as redo:
         (redo.triples.write.mode("overwrite").format("parquet")
          .save(os.path.join(out, "triples", "batch=1")))
     after = sorted(tuple(r) for r in

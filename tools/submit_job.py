@@ -13,10 +13,14 @@ triples, dataprep/codekg.py) over the same
 
 Reads the documents table, runs the full KG pipeline (preprocess ->
 tag -> mutations -> sieve normalize -> neural fallback -> canonicalize),
-and writes triples + mention provenance through CheckpointedSink
-(partitioned parquet snapshots, per-file lineage rows, manifest
-commit LAST so a crash mid-write is invisible to resume).  Emits one
-JSON metrics line on stdout.
+and writes one stage, ``triples`` (partitioned by pred), through
+CheckpointedSink: a parquet snapshot, per-file lineage rows, and the
+manifest commit LAST so a crash mid-write is invisible to resume.
+Emits one JSON metrics line on stdout.
+
+``--resume`` works per stage: when ``triples`` is already committed in
+the manifest the job skips the run and reports the committed row
+count; otherwise it runs the whole job again.
 
 Unlike tests/bench (which build their session through
 bern2_spark.session.get_spark), this script takes the session
