@@ -147,7 +147,7 @@ def expand_cuiless_mentions(normalized: DataFrame,
 def apply_abbreviation_level(normalized: DataFrame, lexicon_df: DataFrame,
                              abbrevs: DataFrame,
                              track_persisted: list | None = None,
-                             lut: dict | None = None) -> DataFrame:
+                             lut: DataFrame | None = None) -> DataFrame:
     """Full abbreviation sieve level: a CUI-less mention whose surface
     is a document-local short form retries the sieve with its LONG
     form, keeps its original surface/span, and adopts the long form's
@@ -155,7 +155,7 @@ def apply_abbreviation_level(normalized: DataFrame, lexicon_df: DataFrame,
 
     The retry runs in-row — ``sieve_cui`` on the ``long_form`` column
     ``expand_cuiless_mentions`` attached, with the main pass's ``lut``
-    plans, so its broadcasts are ReusedExchanges. Only rows whose
+    plan, so its broadcasts are ReusedExchanges. Only rows whose
     document defines the short form carry a long form (a data-induced
     predicate); the rest have null keys and probe nothing.
 

@@ -2,11 +2,13 @@
 of SURVEY §2.2/§2.3.
 
 Every reference "normalizer" is an in-RAM dict probe
-(normalizers/*.py); here each becomes a **broadcast hash join** against
-a key-prepped lexicon, cascaded in sieve priority and resolved with one
+(normalizers/*.py); here all of them become ONE key-prepped lookup
+table, built by one aggregation and broadcast once, whose keys carry
+their sieve level and entity type. Each level is a **broadcast hash
+join** against it, cascaded in sieve priority and resolved with one
 ``coalesce`` (J2/J3's multi-pass sieve as cascaded left joins). The
-mentions fact table is never shuffled: all four lookup joins broadcast
-the dimension side.
+mentions fact table is never shuffled, and every probe after the first
+reads the table's broadcast as a ReusedExchange.
 
 Key preparations (applied identically to both sides, like the
 reference):
@@ -127,40 +129,39 @@ def strip_gene_suffix(col: Column) -> Column:
 
 # ------------------------------------------------------- lexicon tables
 
-def _dedup(df: DataFrame) -> DataFrame:
-    return df.groupBy("ent_type", "key").agg(F.min("cui").alias("cui"))
+# A LUT key is "<level><SEP><ent_type><SEP><level key>": the level and
+# type live inside the one join key, so every probe joins the same
+# broadcast (a separate level predicate would be pushed into the table
+# side as a per-probe filter, one broadcast per level again). concat is
+# null when the level key is, and a null key probes nothing.
+_SEP = "\x1f"
 
 
-def build_lookup_tables(lexicon: DataFrame) -> dict:
-    """-> {level: small DF (ent_type, key, cui)} ready to broadcast."""
+def _lut_key(level: str, key: Column) -> Column:
+    return F.concat(F.lit(level + _SEP), F.col("ent_type"), F.lit(_SEP),
+                    key)
+
+
+def build_lookup_tables(lexicon: DataFrame) -> DataFrame:
+    """-> one small DF (key, cui) ready to broadcast: every sieve
+    level's ``_lut_key`` of every lexicon row the level covers, min(cui)
+    per key."""
     # NB: the reference's 2nd pass probes lower(mention) against the
     # ORIGINAL-case dict keys (species_normalizer.py:20-21) — the
-    # lexicon side is NOT lowercased, so both passes share one table.
-    exact = _dedup(lexicon
-                   .filter(F.col("ent_type").isin(TWO_PASS_TYPES))
-                   .select("ent_type", F.col("name").alias("key"), "cui"))
-    tmchem = _dedup(lexicon
-                    .filter(F.col("ent_type") == "drug")
-                    .select("ent_type", tmchem_key(F.col("name")).alias("key"),
-                            "cui"))
-    biosyn = _dedup(lexicon
-                    .filter(F.col("ent_type") == "disease")
-                    .select("ent_type", biosyn_key(F.col("name")).alias("key"),
-                            "cui"))
-    stem = _dedup(lexicon
-                  .filter(F.col("ent_type") == "disease")
-                  .select("ent_type", stem_key(F.col("name")).alias("key"),
-                          "cui"))
-    num = _dedup(lexicon
-                 .filter(F.col("ent_type") == "disease")
-                 .select("ent_type", num_key(F.col("name")).alias("key"),
-                         "cui"))
-    swap = _dedup(lexicon
-                  .filter(F.col("ent_type") == "disease")
-                  .select("ent_type", swap_key(F.col("name")).alias("key"),
-                          "cui"))
-    return {"exact": exact, "tmchem": tmchem, "biosyn": biosyn,
-            "stem": stem, "num": num, "swap": swap}
+    # lexicon side is NOT lowercased, so both passes probe the exact
+    # level.
+    name, et = F.col("name"), F.col("ent_type")
+    dis = et == "disease"
+    keys = F.array(
+        _lut_key("exact", F.when(et.isin(TWO_PASS_TYPES), name)),
+        _lut_key("tmchem", F.when(et == "drug", tmchem_key(name))),
+        _lut_key("biosyn", F.when(dis, biosyn_key(name))),
+        _lut_key("stem", F.when(dis, stem_key(name))),
+        _lut_key("num", F.when(dis, num_key(name))),
+        _lut_key("swap", F.when(dis, swap_key(name))))
+    return (lexicon.select(F.explode(keys).alias("key"), "cui")
+            .filter(F.col("key").isNotNull())
+            .groupBy("key").agg(F.min("cui").alias("cui")))
 
 
 # ----------------------------------------------- gene taxon context (J4)
@@ -213,14 +214,14 @@ def gene_taxon_lookup(mentions: DataFrame, gene_taxa: DataFrame,
 def normalize_mentions(mentions: DataFrame, lexicon: DataFrame,
                        gene_taxa: Optional[DataFrame] = None,
                        gene_context: Optional[DataFrame] = None,
-                       lut: Optional[dict] = None) -> DataFrame:
+                       lut: Optional[DataFrame] = None) -> DataFrame:
     """MENTIONS -> NORMALIZED (adds cui, is_neural_normalized=false):
     ``sieve_cui`` on the mention surface.
 
-    ``lut``: pre-built ``build_lookup_tables`` result — pass it when
+    ``lut``: the pre-built ``build_lookup_tables`` table — pass it when
     the same lexicon is probed again in one plan (the abbreviation
-    retry does) so both probes share one set of LUT plans and their
-    broadcasts dedupe into ReusedExchanges."""
+    retry does) so both probes share one LUT plan and its broadcast
+    is built once, then read as ReusedExchanges."""
     if lut is None:
         lut = build_lookup_tables(lexicon)
     return (sieve_cui(mentions, lut, "mention", "cui", gene_taxa,
@@ -228,14 +229,14 @@ def normalize_mentions(mentions: DataFrame, lexicon: DataFrame,
             .withColumn("is_neural_normalized", F.lit(False)))
 
 
-def sieve_cui(m: DataFrame, lut: dict, surface: str, out: str,
+def sieve_cui(m: DataFrame, lut: DataFrame, surface: str, out: str,
               gene_taxa: Optional[DataFrame] = None,
               gene_context: Optional[DataFrame] = None) -> DataFrame:
     """Adds column ``out``: the sieve's cui for the ``surface`` column.
 
-    Seven broadcast left joins (exact, lower, tmchem, biosyn, stemmed,
-    numbers, subject/object-swap — the Sieve cascade in priority order)
-    + one priority coalesce; type-specific id post-processing; mutations
+    Seven broadcast left joins against the one ``lut`` (exact, lower,
+    tmchem, biosyn, stemmed, numbers, subject/object-swap — the Sieve
+    cascade in priority order) + one priority coalesce; type-specific id post-processing; mutations
     pass through with their tmVar-normalized name as cui. When
     ``gene_taxa`` (taxid, name, cui) is given, gene surfaces first probe
     the taxon-aware dictionary under the doc's ``gene_context`` (default
@@ -248,22 +249,18 @@ def sieve_cui(m: DataFrame, lut: dict, surface: str, out: str,
                strip_gene_suffix(F.col(surface)))
          .otherwise(F.col(surface)))
 
-    def lkp(df, table, suffix, key_col):
-        t = lut[table].select(
-            F.col("ent_type").alias(f"_et_{suffix}"),
-            F.col("key").alias(f"_key_{suffix}"),
-            F.col("cui").alias(f"cui_{suffix}"))
-        return (df.join(
-                    F.broadcast(t),
-                    (F.col("ent_type") == F.col(f"_et_{suffix}"))
-                    & (key_col == F.col(f"_key_{suffix}")),
-                    "left")
-                .drop(f"_et_{suffix}", f"_key_{suffix}"))
+    def lkp(df, level, suffix, key_col):
+        t = lut.select(F.col("key").alias("_key"),
+                       F.col("cui").alias(f"cui_{suffix}"))
+        return (df.join(F.broadcast(t),
+                        _lut_key(level, key_col) == F.col("_key"),
+                        "left")
+                .drop("_key"))
 
     # Hot-path key computation (measured: the naive form tripled the
     # flagship's wall time at sf0.1). Two rules:
-    # * keys feeding a TYPE-RESTRICTED LUT are computed only for rows
-    #   of that type (NULL keys can never join — the LUT's ent_type
+    # * keys of a TYPE-RESTRICTED level are computed only for rows
+    #   of that type (NULL keys can never join — the LUT key's ent_type
     #   would have to match anyway), so non-disease mentions skip the
     #   whole stem/num/swap chain and non-drugs skip tmchem;
     # * each key BUILDS ON the previous one instead of recomputing it
@@ -302,7 +299,7 @@ def sieve_cui(m: DataFrame, lut: dict, surface: str, out: str,
             F.when(F.col("ent_type") == "drug",
                    tmchem_key(F.col("k_surface"))))
     m = lkp(m, "biosyn", "biosyn", F.col("k_bio"))
-    # J3 stemmed level: disease-only LUT — an inflected surface
+    # J3 stemmed level: disease-only — an inflected surface
     # ('lung cancers') resolves when every stricter level missed
     # (Sieve level ordering)
     m = lkp(m, "stem", "stem", F.col("k_stem"))

@@ -101,7 +101,7 @@ def run_pipeline(documents: DataFrame,
     # * annotations — both sink writes (triples and annotations) read
     #   it, so the neural pass, W1 and to_annotations run once.
     # The main sieve and the abbreviation retry share one plan (no
-    # cache between them), so the retry's LUT broadcasts are reused.
+    # cache between them), so the retry reuses the LUT's broadcast.
     # MEMORY_AND_DISK: at real scale the corpus spills instead of OOMing.
     from pyspark import StorageLevel
     persisted = []
@@ -115,12 +115,12 @@ def run_pipeline(documents: DataFrame,
     muts = detect_mutations(pre)
 
     # Stage 4+5 on NER mentions; mutations carry tmVar normalization.
-    # The sieve LUT plans are built ONCE and shared between the main
-    # sieve and the abbreviation retry: identical broadcast subtrees
-    # then dedupe via ReusedExchange instead of re-running their
-    # groupBys. (Deliberately NOT persisted: caching tiny LUTs replaces
-    # free exchange reuse with per-run cache-materialization jobs —
-    # measured 2x worse on the flagship.)
+    # The sieve's one LUT plan is built ONCE and shared between the
+    # main sieve and the abbreviation retry: its 14 probes then read
+    # one broadcast (13 ReusedExchanges) built by one groupBy.
+    # (Deliberately NOT persisted: caching the tiny LUT replaces free
+    # exchange reuse with per-run cache-materialization jobs — measured
+    # 2x worse on the flagship.)
     from bern2_spark.operators.normalize import build_lookup_tables
     lut = build_lookup_tables(lexicon_df)
     ner_norm = normalize_mentions(ner, lexicon_df, lut=lut)

@@ -19,7 +19,7 @@ Spark builds DataFrames from them, the oracle SQL embeds them as VALUES
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Optional, Tuple
+from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F

@@ -34,7 +34,6 @@ import os
 from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bern2_spark.dataprep.similarity import ivf_assign
 

@@ -27,6 +27,24 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def synthetic_result(spark):
+    """One 60-doc synthetic ``run_pipeline`` shared by the session: its
+    docs, annotations, triples and quarantine as local checkpoints, so
+    they survive the ``clearCache()`` calls of tests/test_entry.py and
+    no later action re-runs the pipeline."""
+    from types import SimpleNamespace
+
+    from bern2_spark import corpus
+    from bern2_spark.pipeline import run_pipeline
+    lex = corpus.make_lexicon(42)
+    with run_pipeline(corpus.documents_df(spark, 60, 42, lex), lex,
+                      spark) as res:
+        return SimpleNamespace(**{
+            name: getattr(res, name).localCheckpoint()
+            for name in ("docs", "annotations", "triples", "quarantine")})
+
+
+@pytest.fixture(scope="session")
 def ref_ops():
     """The reference's multi_ner/ops.py imported as a pure-Python parity
     oracle (numpy-only module; we import it at test time, never copy it)."""

@@ -91,18 +91,15 @@ def test_w1_keeps_duplicate_winner_rows(spark):
     assert got == ref_resolve(mentions) == [1, 2]
 
 
-def test_pubannotation_document_shape(spark):
+def test_pubannotation_document_shape(synthetic_result):
     """PubAnnotation nested output (bern2/convert.py:263-335): one row
     per doc, annotations array sorted by (span.begin, obj), JSON output
     drops the null mutation fields on non-mutation annotations."""
     import json
 
     from bern2_spark.operators.postprocess import to_pubannotation
-    from bern2_spark import corpus
-    from bern2_spark.pipeline import run_pipeline
 
-    lex = corpus.make_lexicon(42)
-    res = run_pipeline(corpus.documents_df(spark, 30, 42, lex), lex, spark)
+    res = synthetic_result
     pa = to_pubannotation(res.annotations, res.docs,
                           timestamp="Thu Jan 01 00:00:00 +0000 1970")
     rows = pa.collect()

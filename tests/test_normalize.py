@@ -18,6 +18,9 @@ LEX = [
     ("disease", "MESH:D1", "Alpha Syndrome"),
     ("disease", "MESH:D2", "beta-osis"),
     ("disease", "MESH:D3", "Type 2 Gammaopathy"),
+    # two names sharing the biosyn key 'delta fever' (level isolation)
+    ("disease", "MESH:D5", "delta fever"),
+    ("disease", "MESH:D4", "Delta-Fever"),
     ("gene", "7157", "p53"),
     ("gene", "1956-2", "egfr"),
 ]
@@ -49,6 +52,11 @@ CASES = [
     ("disease", "Alpha Syndrome", "MESH:D1"),
     ("disease", "alpha syndrome", "MESH:D1"),
     ("disease", "ALPHA, SYNDROME!", "MESH:D1"),     # biosyn level
+    # the sieve's levels share one lookup table but stay apart: the
+    # exact level's D5 beats the biosyn level's min(cui) D4, and a
+    # surface that misses the exact level resolves at biosyn to D4
+    ("disease", "delta fever", "MESH:D5"),
+    ("disease", "DELTA FEVER!", "MESH:D4"),
     # J3 stemmed level (Sieve stemming/partial): plural & inflected
     # surfaces resolve when every stricter level misses
     ("disease", "Alpha Syndromes", "MESH:D1"),

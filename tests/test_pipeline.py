@@ -17,43 +17,37 @@ def _synthetic(spark, n_docs):
                         spark)
 
 
-@pytest.fixture(scope="module")
-def result(spark):
-    r = _synthetic(spark, 60)
-    r.annotations.cache().count()
-    return r
-
-
-def test_triples_exist_and_shape(result):
-    rows = result.triples.collect()
+def test_triples_exist_and_shape(synthetic_result):
+    rows = synthetic_result.triples.collect()
     assert len(rows) > 20
     assert all(r.pred.startswith("has_") for r in rows)
     assert all(r.obj != CUI_LESS for r in rows)
 
 
-def test_annotation_span_invariant(result):
-    joined = result.annotations.join(
-        result.docs.select("doc_id", "text"), "doc_id")
+def test_annotation_span_invariant(synthetic_result):
+    joined = synthetic_result.annotations.join(
+        synthetic_result.docs.select("doc_id", "text"), "doc_id")
     bad = joined.filter(
         "substring(text, begin + 1, end - begin) != mention").count()
     assert bad == 0
 
 
-def test_mutations_present_with_null_prob(result):
-    muts = result.annotations.filter("obj = 'mutation'").collect()
+def test_mutations_present_with_null_prob(synthetic_result):
+    muts = (synthetic_result.annotations.filter("obj = 'mutation'")
+            .collect())
     assert muts and all(m.prob is None for m in muts)
     assert any(m.mutationType == "ProteinMutation" for m in muts)
 
 
-def test_species_blocklist_filtered(result):
-    surfaced = {r.mention for r in
-                result.annotations.filter("obj = 'species'").collect()}
+def test_species_blocklist_filtered(synthetic_result):
+    surfaced = {r.mention for r in synthetic_result.annotations
+                .filter("obj = 'species'").collect()}
     assert "patients" not in surfaced and "human" not in surfaced
     assert "Homo sapiens" in surfaced
 
 
-def test_prefix_standardization(result):
-    objs = result.triples.select("obj").distinct().collect()
+def test_prefix_standardization(synthetic_result):
+    objs = synthetic_result.triples.select("obj").distinct().collect()
     vals = {r.obj for r in objs}
     assert not any(v.startswith("EntrezGene:") for v in vals)
     assert any(v.startswith("NCBIGene:") for v in vals)
@@ -61,22 +55,24 @@ def test_prefix_standardization(result):
     assert any(v.startswith("mesh:") for v in vals)
 
 
-def test_neural_fallback_links_suffixy_surfaces(result):
-    neural = result.annotations.filter("is_neural_normalized").collect()
+def test_neural_fallback_links_suffixy_surfaces(synthetic_result):
+    neural = (synthetic_result.annotations
+              .filter("is_neural_normalized").collect())
     assert neural  # granulomatosis-style surfaces got linked by embedding
 
 
-def test_determinism(spark, result):
+def test_determinism(spark, synthetic_result):
     r2 = _synthetic(spark, 60)
-    a = sorted(map(tuple, result.annotations.drop("prob").collect()))
+    a = sorted(map(tuple,
+                   synthetic_result.annotations.drop("prob").collect()))
     b = sorted(map(tuple, r2.annotations.drop("prob").collect()))
     assert a == b
 
 
-def test_no_overlap_conflicts(result):
+def test_no_overlap_conflicts(synthetic_result):
     # after W1, every (doc, span) among non-mutation rows carries a
     # single (cui-set, type)
-    non_mut = result.annotations.filter("obj != 'mutation'")
+    non_mut = synthetic_result.annotations.filter("obj != 'mutation'")
     conflict = (non_mut.groupBy("doc_id", "begin", "end")
                 .agg(F.countDistinct("obj").alias("n_types"))
                 .filter("n_types > 1").count())
@@ -187,9 +183,9 @@ def _outer_final_plan(df) -> str:
 def test_abbreviation_retry_reuses_the_sieve_broadcasts(spark):
     """The abbreviation retry runs in the main sieve's rows and plan: the
     post-abbreviation mentions' executed plan holds no join keyed on
-    mention_id, each LUT broadcast is built once, and all seven retry
-    lookups (plus the lowercase pass) read it as a ReusedExchange."""
-    from bern2_spark.operators.normalize import build_lookup_tables
+    mention_id, and the sieve's one lookup table is broadcast once — the
+    other 13 of its 14 probes (7 levels in the main pass, 7 in the retry)
+    read that broadcast as a ReusedExchange."""
     lex = corpus.make_lexicon(42)
     lf = next(n for t, _c, n in lex if t == "disease" and " " in n)
     sf = "".join(w[0] for w in lf.split()).upper()
@@ -206,12 +202,11 @@ def test_abbreviation_retry_reuses_the_sieve_broadcasts(spark):
         assert retried.filter(F.col("cui") == CUI_LESS).count() == 0
         plan = _outer_final_plan(res.normalized)
     assert not re.search(r"Join \[[^\]]*\bmention_id#", plan)
-    built = re.findall(r"[+:]- BroadcastExchange .*\[plan_id=(\d+)\]", plan)
+    # a sieve probe's broadcast side outputs its level's cui_<level> hit
     reused = re.findall(
-        r"[+:]- ReusedExchange \[_et_\w+#.*\[plan_id=(\d+)\]", plan)
-    assert len(reused) == 8
-    lut_ids = set(reused)
-    assert len(lut_ids) == len(build_lookup_tables(
-        spark.createDataFrame([], "ent_type string, cui string, "
-                              "name string")))
-    assert sorted(i for i in built if i in lut_ids) == sorted(lut_ids)
+        r"[+:]- ReusedExchange \[[^\]]*\bcui_\w+#[^\]]*\], "
+        r"BroadcastExchange .*\[plan_id=(\d+)\]", plan)
+    assert len(reused) == 13
+    assert len(set(reused)) == 1
+    built = re.findall(r"[+:]- BroadcastExchange .*\[plan_id=(\d+)\]", plan)
+    assert built.count(reused[0]) == 1

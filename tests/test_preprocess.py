@@ -81,11 +81,7 @@ def test_quarantine_side_output(spark):
                     "d4": ERROR_NULL_CONTENT}
 
 
-def test_pipeline_quarantine_wired(spark):
-    from bern2_spark import corpus
-    from bern2_spark.pipeline import run_pipeline
-    lex = corpus.make_lexicon(42)
-    res = run_pipeline(corpus.documents_df(spark, 30, 42, lex), lex, spark)
-    codes = {r.error_code for r in res.quarantine.collect()}
+def test_pipeline_quarantine_wired(synthetic_result):
+    codes = {r.error_code for r in synthetic_result.quarantine.collect()}
     # the synthetic corpus plants a digits-only doc and an empty doc
     assert codes == {1, 2}

@@ -18,6 +18,7 @@ if [ -n "$FULL" ]; then
 else
     python -m pytest -x -q \
         tests/test_normalize.py \
+        tests/test_abbrev.py \
         tests/test_pipeline.py \
         tests/test_canonicalize.py \
         tests/test_entry.py::test_entry_smoke
